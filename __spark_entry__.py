@@ -2193,12 +2193,16 @@ def _stream_partitions_for(src: str, current: int) -> int:
     ``spark.sql.shuffle.partitions`` so a cluster submitter's sizing
     still wins at scale.  ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS``
     overrides for deployments whose state size is not input-
-    proportional.  Partitioning only changes WHERE a key's state
-    lives, never per-key results, so emissions are identical.
+    proportional; a value that is not an integer is ignored.
+    Partitioning only changes WHERE a key's state lives, never per-key
+    results, so emissions are identical.
     """
     env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
     if env:
-        return max(1, int(env))
+        try:
+            return max(1, int(env))
+        except ValueError:
+            pass  # malformed override: fall back to the derived count
     try:
         size = sum(
             os.path.getsize(os.path.join(src, f))

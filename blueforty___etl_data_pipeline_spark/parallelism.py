@@ -29,18 +29,37 @@ retry: Spark sorts input rows before round-robin assignment
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.errors import NumberFormatException
+from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["spread_scan"]
 
 
-def _local_size(uri: str) -> int:
-    path = uri[7:] if uri.startswith("file://") else uri
+def _local_size(uri: str) -> int | None:
+    """Size of a local input file, or None when it is unknown: a remote
+    filesystem (``s3://``, ``hdfs://``, ...) or a file that cannot be
+    stat'ed."""
+    parsed = urlparse(uri)
+    if parsed.scheme not in ("", "file"):
+        return None
     try:
-        return os.path.getsize(path)
+        return os.path.getsize(unquote(parsed.path))
     except OSError:
-        return 0
+        return None
+
+
+def _max_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes`` in bytes, unit suffixes
+    (``b/k/m/g/...``) parsed the way Spark parses them; the conf's
+    128 MiB default when the value cannot be parsed."""
+    try:
+        raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
+        utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+        return int(utils.byteStringAsBytes(raw))
+    except NumberFormatException:
+        return 128 << 20
 
 
 def spread_scan(df: DataFrame, min_rows_per_task: int | None = None) -> DataFrame:
@@ -54,7 +73,9 @@ def spread_scan(df: DataFrame, min_rows_per_task: int | None = None) -> DataFram
     sidecar tables are single-row-group), plus the split count for
     large files.  The estimate errs high for many-small-file tables
     (packing), which makes the helper conservatively skip — correct,
-    since such scans are already parallel.
+    since such scans are already parallel.  When any input's size is
+    unknown (a remote filesystem) the frame is returned unchanged: a
+    large remote table must never get a full round-robin shuffle.
     """
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -66,14 +87,10 @@ def spread_scan(df: DataFrame, min_rows_per_task: int | None = None) -> DataFram
         return df
     if not files:
         return df
-    total = sum(_local_size(f) for f in files)
-    try:
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        digits = "".join(ch for ch in raw if ch.isdigit())
-        max_pb = int(digits) if digits else 128 << 20
-    except Exception:
-        max_pb = 128 << 20
-    est_tasks = max(len(files), total // max_pb)
+    sizes = [_local_size(f) for f in files]
+    if None in sizes:
+        return df
+    est_tasks = max(len(files), sum(sizes) // _max_partition_bytes(spark))
     if est_tasks >= par:
         return df
     return df.repartition(par)

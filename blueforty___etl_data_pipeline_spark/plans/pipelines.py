@@ -54,6 +54,10 @@ PURCHASES_POSITIONAL = [
     (16, "Description", "trim"),
 ]
 
+#: The staged file's 21 positional fields $1..$21 (BlueForty.py:88-111),
+#: read as strings; ``PURCHASES_POSITIONAL`` converts them.
+PURCHASES_FIELDS = tuple(f"c{i}" for i in range(1, 22))
+
 _CONVERTERS = {
     "number": try_to_number,
     "decimal": try_to_decimal,
@@ -76,16 +80,17 @@ def load_purchases_csv(
     """
     # header=true: OSS Spark has no skipRows option, so the header line must
     # be consumed by the reader itself (SKIP_HEADER=1, BlueForty.py:26).
-    # Columns stay addressable positionally via df.columns order.
+    # The declared all-string layout binds fields by position, whatever
+    # the header says, and needs no header-discovery job.
     raw = read_csv(
         spark,
         path,
         options={**PURCHASES_CSV_OPTIONS, "header": "true"},
         path_glob=path_glob,
+        columns=PURCHASES_FIELDS,
     )
-    cols = raw.columns  # header names, positional order = $1..$21
     out = [
-        _CONVERTERS[kind](raw[cols[pos - 1]]).alias(name)
+        _CONVERTERS[kind](raw[PURCHASES_FIELDS[pos - 1]]).alias(name)
         for pos, name, kind in PURCHASES_POSITIONAL
     ]
     return raw.select(

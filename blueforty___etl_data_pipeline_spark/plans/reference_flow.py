@@ -18,9 +18,12 @@ as DataFrames (and optionally materializes them, the CTAS analog):
 | SUPPLIER_ZIP_CODE_WEATHER CTAS (:452-463) | supplier_zip_weather | ``supplier_zip_weather`` |
 | PURCHASES_WITH_WEATHER CTAS (:467-475) | purchases_with_weather | ``purchases_with_weather`` |
 
-The whole flow is ONE lazy DAG per output: nothing materializes until
-the caller acts (or passes ``materialize_dir`` for the CTAS analogs —
-written as Parquet, the reference's three CTAS tables, :425/:452/:467).
+Without ``materialize_dir`` the whole flow is ONE lazy DAG per output:
+nothing runs until the caller acts.  With it, each of the reference's
+three CTAS statements (:425/:452/:467) is a table, as in Snowflake: it
+is written as Parquet in order, and every later relation reads the
+written files (with the written schema declared, so no footer
+inference job) instead of recomputing the CTAS plan from the raw files.
 """
 
 from __future__ import annotations
@@ -63,6 +66,14 @@ def run_reference_flow(
     """
     out: dict[str, DataFrame] = {}
 
+    def ctas(name: str, df: DataFrame) -> DataFrame:
+        # CREATE TABLE AS: write, then let later statements read the table.
+        if materialize_dir is None:
+            return df
+        path = f"{materialize_dir}/{name}"
+        write_table(df, path)
+        return spark.read.schema(df.schema).parquet(path)
+
     # EP1 — monthly purchase CSVs → typed PURCHASES → totals view
     out["purchases"] = load_purchases_csv(spark, purchases_csv_dir)
     out["purchase_order_totals"] = purchase_order_totals(out["purchases"])
@@ -84,6 +95,7 @@ def run_reference_flow(
         spark,
         zip_geo_tsv,
         options={"header": "true", "sep": "\t", "mode": "PERMISSIVE"},
+        columns=("zip_code", "lat", "lon"),
     ).select(
         "zip_code",
         F.col("lat").try_cast("double").alias("lat"),
@@ -92,26 +104,24 @@ def run_reference_flow(
     zips_geo = out["supplier_zip5"].select(
         F.col("ZIP5").alias("zip_code")
     ).join(out["zip_geo"], on="zip_code")
-    out["closest_stations"] = closest_stations(zips_geo, stations)
-    out["supplier_zip_code_weather"] = supplier_zip_weather(
-        out["closest_stations"], weather_timeseries
+    # The reference's three CTAS tables (:425-448, :452-463, :467-475).
+    out["closest_stations"] = ctas(
+        "closest_stations", closest_stations(zips_geo, stations)
     )
-    out["purchases_with_weather"] = purchases_with_weather(
-        out["purchase_orders_and_invoices"],
-        out["supplier_case"],
-        out["supplier_zip_code_weather"],
+    out["supplier_zip_code_weather"] = ctas(
+        "supplier_zip_code_weather",
+        supplier_zip_weather(out["closest_stations"], weather_timeseries),
+    )
+    out["purchases_with_weather"] = ctas(
+        "purchases_with_weather",
+        purchases_with_weather(
+            out["purchase_orders_and_invoices"],
+            out["supplier_case"],
+            out["supplier_zip_code_weather"],
+        ),
     )
 
     for name, df in out.items():
         df.createOrReplaceTempView(name)
-
-    if materialize_dir is not None:
-        # The reference's three CTAS tables (:425-448, :452-463, :467-475).
-        for name in (
-            "closest_stations",
-            "supplier_zip_code_weather",
-            "purchases_with_weather",
-        ):
-            write_table(out[name], f"{materialize_dir}/{name}")
 
     return out

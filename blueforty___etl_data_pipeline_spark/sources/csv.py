@@ -18,7 +18,7 @@ DROPMALFORMED, ABORT_STATEMENT ≈ FAILFAST).
 
 from __future__ import annotations
 
-from collections.abc import Mapping
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,6 +68,7 @@ def read_csv(
     options: dict[str, str] | None = None,
     null_sentinels: tuple[str, ...] | None = NULL_SENTINELS,
     path_glob: str | None = None,
+    columns: Sequence[str] | None = None,
 ) -> DataFrame:
     """Declarative CSV scan with the reference's option bundle.
 
@@ -75,12 +76,24 @@ def read_csv(
     (BlueForty.py:110) via ``pathGlobFilter`` + ``recursiveFileLookup`` —
     at scale this is file-listing-time pruning, no data read for
     non-matching files.
+
+    ``columns`` declares a positional all-string layout (the reference's
+    ``$1..$n`` fields): field ``i`` of every line is named
+    ``columns[i]``, a header line is still skipped when ``header`` is
+    on, and the scan runs no header-discovery job.  Mutually exclusive
+    with ``schema``.
     """
     opts = dict(PURCHASES_CSV_OPTIONS if options is None else options)
     if path_glob:
         opts["pathGlobFilter"] = path_glob
         opts["recursiveFileLookup"] = "true"
     reader = spark.read.options(**opts)
+    if columns is not None:
+        if schema is not None:
+            raise ValueError("pass either schema or columns, not both")
+        reader = reader.schema(
+            StructType([StructField(c, StringType()) for c in columns])
+        )
     if schema is not None:
         # Read as all-string first when sentinel scrubbing is requested so
         # sentinels in numeric columns don't hard-fail the typed parse;

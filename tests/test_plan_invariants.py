@@ -228,6 +228,31 @@ def _fmt(df) -> str:
     return buf.getvalue()
 
 
+#: The default tier's plan audit: a few representative queries run
+#: through the sweeps' checks above (no row UDF, no cartesian, no
+#: unpartitioned window), so a regression in one of these shapes fails
+#: every run, not only the ``slow`` tier: a deliberate broadcast cross
+#: join, a range join, the reference's reconciliation join, a
+#: mapInPandas stage, windowed analytics and a spread scan.
+SMOKE_QUERIES = (
+    "closest_stations",
+    "range_join",
+    "reconciliation",
+    "multimodal_features",
+    "window_analytics",
+    "cms_frequency",
+)
+
+
+@pytest.mark.parametrize("name", SMOKE_QUERIES)
+def test_plan_invariants_smoke(spark, name):
+    import __spark_entry__ as entrymod
+
+    plan = _fmt(entrymod.queries()[name](spark, SF_DIR))
+    assert not [tok for tok in FORBIDDEN if tok in plan], name
+    assert not _feeding_single_partition_windows(plan), name
+
+
 def test_round11_expensive_query_plan_pins(spark):
     """Formatted-plan pins for the most expensive headline queries
     (VERDICT r10 item 7): PLANS.md documents a scale shape for each —

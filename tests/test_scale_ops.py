@@ -3,6 +3,7 @@ embedding near-dup blocking."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from blueforty___etl_data_pipeline_spark.operators.similarity import (
@@ -426,10 +427,12 @@ def test_spread_scan_adaptive_repartition(spark, tmp_path):
 
     from blueforty___etl_data_pipeline_spark.parallelism import spread_scan
 
+    par = spark.sparkContext.defaultParallelism
+    if par <= 1:
+        pytest.skip("spread_scan is an identity on a single-core session")
     src = str(tmp_path / "one_group")
     spark.range(10_000).coalesce(1).write.parquet(src)
     df = spark.read.parquet(src)
-    par = spark.sparkContext.defaultParallelism
 
     out = spread_scan(df)
     # plan carries the round-robin exchange...
@@ -447,3 +450,65 @@ def test_spread_scan_adaptive_repartition(spark, tmp_path):
     spark.range(10_000).repartition(par).write.parquet(many)
     df_many = spark.read.parquet(many)
     assert spread_scan(df_many) is df_many
+
+
+def test_spread_scan_unknown_size_is_identity(spark, tmp_path, monkeypatch):
+    # A remote input (s3://, hdfs://) cannot be stat'ed: its size is
+    # unknown, and a large remote table must never get a round-robin
+    # shuffle sized by file count, so the frame comes back unchanged.
+    from blueforty___etl_data_pipeline_spark.parallelism import (
+        _local_size,
+        spread_scan,
+    )
+
+    assert _local_size("s3://bucket/t/part-0.parquet") is None
+    assert _local_size("hdfs://nn:8020/t/part-0.parquet") is None
+    assert _local_size((tmp_path / "missing.parquet").as_uri()) is None
+    spaced = tmp_path / "a b.bin"
+    spaced.write_bytes(b"x" * 10)
+    assert _local_size(spaced.as_uri()) == 10  # percent-encoded URI
+
+    if spark.sparkContext.defaultParallelism <= 1:
+        pytest.skip("spread_scan is an identity on a single-core session")
+    src = str(tmp_path / "one_group")
+    spark.range(100).coalesce(1).write.parquet(src)
+    df = spark.read.parquet(src)
+    local = df.inputFiles()
+    assert spread_scan(df) is not df  # starved local scan: spread
+    monkeypatch.setattr(
+        df, "inputFiles", lambda: [*local, "s3://bucket/t/part-1.parquet"]
+    )
+    assert spread_scan(df) is df
+
+
+def test_spread_scan_parses_max_partition_bytes_units(spark):
+    # spark.sql.files.maxPartitionBytes takes unit suffixes; "128m" is
+    # 128 MiB, not 128 bytes.  The default must still parse to 128 MiB
+    # so existing spread decisions (cms_frequency) do not change.
+    from types import SimpleNamespace
+
+    from blueforty___etl_data_pipeline_spark.parallelism import (
+        _max_partition_bytes,
+    )
+
+    key = "spark.sql.files.maxPartitionBytes"
+    assert _max_partition_bytes(spark) == 134217728
+    old = spark.conf.get(key)
+    try:
+        for raw, want in (
+            ("128m", 128 << 20),
+            ("64MB", 64 << 20),
+            ("1g", 1 << 30),
+            ("512k", 512 << 10),
+            ("100b", 100),
+            ("4096", 4096),
+        ):
+            spark.conf.set(key, raw)
+            assert _max_partition_bytes(spark) == want, raw
+    finally:
+        spark.conf.set(key, old)
+    unparsable = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda _key: "lots"),
+        sparkContext=spark.sparkContext,
+    )
+    assert _max_partition_bytes(unparsable) == 128 << 20

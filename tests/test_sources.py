@@ -106,6 +106,27 @@ def test_csv_schema_width_mismatch_raises(spark, tmp_path):
         assert "1 fields" in str(e)
 
 
+def test_csv_declared_columns_bind_by_position(spark, fixtures_dir):
+    # A declared all-string layout names fields by position, whatever the
+    # header says, and still skips the header line.
+    path = os.path.join(fixtures_dir, "supplier", "zipcode_geolocation.tsv")
+    df = read_csv(
+        spark,
+        path,
+        options={"header": "true", "sep": "\t"},
+        columns=("zip", "latitude", "longitude"),
+    )
+    rows = {r["zip"]: r for r in df.collect()}
+    assert df.columns == ["zip", "latitude", "longitude"]
+    assert "zip_code" not in rows  # header skipped
+    assert rows["90210"]["latitude"] == "34.09"
+    try:
+        read_csv(spark, path, schema=StructType([]), columns=("zip",))
+        raise AssertionError("expected ValueError")
+    except ValueError as e:
+        assert "not both" in str(e)
+
+
 def test_nullify_sentinels_expression(spark):
     df = spark.createDataFrame(
         [("NULL",), ("\\N",), ("N/A",), ("",), ("keep",)], "v string"
