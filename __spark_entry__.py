@@ -4,7 +4,10 @@
 PURCHASE_ORDERS_AND_INVOICES analog, BlueForty.py:220-233) on sf0.001.
 ``queries()`` declares one named query per implemented operator family
 from SURVEY.md §2 plus the LLM-pipeline extensions; ``oracle_sql()``
-supplies the DuckDB twin for each.
+supplies the DuckDB twin for each.  A query is declared by defining
+its builder ``q_<name>`` and its oracle, ``_SQL_<NAME>`` (a string) or
+``_sql_<name>()`` (a function returning one); both functions derive
+their dicts from those names.
 
 Cross-engine determinism rules used throughout (so the driver's
 row-count + schema + order-insensitive value-hash comparison is exact,
@@ -273,7 +276,7 @@ def q_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("POAmount", F.col("POAmount").cast("double"))
 
 
-_SQL_PO_TOTALS = """
+_SQL_ORDER_TOTALS = """
 SELECT l_orderkey AS PurchaseOrderID,
        CAST(l_shipdate AS DATE) AS OrderDate,
        l_suppkey AS SupplierID,
@@ -364,7 +367,7 @@ def q_outer_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_OUTER_JOIN = """
+_SQL_OUTER_JOIN_AGG = """
 SELECT c_custkey, COUNT(o_orderkey) AS n_orders
 FROM customer LEFT JOIN orders ON c_custkey = o_custkey
 GROUP BY 1
@@ -391,7 +394,7 @@ def q_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semi.unionByName(anti)
 
 
-_SQL_SEMI_ANTI = """
+_SQL_SEMI_ANTI_JOIN = """
 SELECT 'semi' AS op, c_custkey FROM customer
 WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 150000)
 UNION ALL
@@ -593,7 +596,7 @@ def q_top1_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOP1 = """
+_SQL_TOP1_PER_GROUP = """
 SELECT l_orderkey, l_linenumber, l_extendedprice
 FROM (SELECT l_orderkey, l_linenumber, l_extendedprice,
              ROW_NUMBER() OVER (PARTITION BY l_orderkey
@@ -617,7 +620,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOPK = """
+_SQL_TOPK_PER_GROUP = """
 SELECT l_orderkey, l_linenumber, l_extendedprice, rn
 FROM (SELECT l_orderkey, l_linenumber, l_extendedprice,
              CAST(ROW_NUMBER() OVER (PARTITION BY l_orderkey
@@ -647,7 +650,7 @@ def q_argmin_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_ARGMIN = """
+_SQL_ARGMIN_AGG = """
 SELECT l_orderkey, l_linenumber, l_extendedprice
 FROM (SELECT l_orderkey, l_linenumber, l_extendedprice,
              ROW_NUMBER() OVER (PARTITION BY l_orderkey
@@ -673,7 +676,7 @@ def q_composite_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_COMPOSITE_JOIN = """
+_SQL_COMPOSITE_KEY_JOIN = """
 WITH mx AS (SELECT l_orderkey AS k, MAX(l_shipdate) AS max_ship
             FROM lineitem GROUP BY 1)
 SELECT l.l_orderkey, l.l_linenumber, l.l_shipdate AS ship_ts
@@ -1536,7 +1539,7 @@ _SQL_HAVERSINE = (
     " * POWER(SIN(RADIANS(s.LONGITUDE - z.lon) / 2), 2)))"
 )
 
-_SQL_CLOSEST = f"""
+_SQL_CLOSEST_STATIONS = f"""
 WITH z AS ({_SQL_ZIPS}), s AS ({_SQL_STATIONS}),
 d AS (SELECT z.zip_code, s.NOAA_WEATHER_STATION_ID AS station_id,
              ROUND({_SQL_HAVERSINE}, 4) AS dist_km
@@ -1548,6 +1551,7 @@ FROM (SELECT zip_code, station_id,
       FROM d)
 WHERE rn = 1
 """
+_SQL_CLOSEST_STATIONS_GRID = _SQL_CLOSEST_STATIONS
 
 
 def _geo_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -1638,7 +1642,7 @@ def q_cleaning_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CLEANING = """
+_SQL_CLEANING_SCALARS = """
 WITH dirty AS (
   SELECT p_partkey,
          CASE WHEN p_partkey % 7 = 0 THEN NULL
@@ -1734,7 +1738,7 @@ def q_json_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select("event_id", parsed["k"].alias("k_value"))
 
 
-_SQL_JSON = """
+_SQL_JSON_FLATTEN = """
 SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_value
 FROM events
 """
@@ -1759,7 +1763,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "user_id", "asof_ts_us")
 
 
-_SQL_ASOF = """
+_SQL_ASOF_JOIN = """
 WITH clicks AS (SELECT user_id, ts, event_id FROM events
                 WHERE event_type = 'click'),
 purchases AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase')
@@ -2031,12 +2035,13 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TUMBLING = f"""
+_SQL_TUMBLING_WINDOW = f"""
 SELECT CAST(epoch_us(time_bucket(INTERVAL 1 HOUR, ts)) AS BIGINT)
          AS window_start_us,
        event_type, COUNT(*) AS n_events, {_VAL_MICROS} AS value_micros
 FROM events GROUP BY 1, 2
 """
+_SQL_STREAMING_TUMBLING = _SQL_TUMBLING_WINDOW
 
 
 def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2057,7 +2062,7 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SLIDING = """
+_SQL_SLIDING_WINDOW = """
 SELECT CAST(epoch_us(time_bucket(INTERVAL 30 MINUTE, ts)) AS BIGINT)
          - off AS window_start_us,
        event_type, COUNT(*) AS n_events
@@ -2065,6 +2070,7 @@ FROM events CROSS JOIN (VALUES (CAST(0 AS BIGINT)),
                                (CAST(1800000000 AS BIGINT))) t(off)
 GROUP BY 1, 2
 """
+_SQL_STREAMING_SLIDING = _SQL_SLIDING_WINDOW
 
 
 def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2093,7 +2099,7 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SESSION = f"""
+_SQL_SESSION_WINDOW = f"""
 WITH d AS (
   SELECT user_id, ts, value,
          CASE WHEN lag(ts) OVER w IS NULL
@@ -2112,6 +2118,7 @@ SELECT user_id,
        COUNT(*) AS n_events, {_VAL_MICROS} AS value_micros
 FROM s GROUP BY user_id, sid
 """
+_SQL_STREAMING_SESSION = _SQL_SESSION_WINDOW
 
 
 def _await_streaming(q, timeout: int = 300) -> None:
@@ -2191,18 +2198,9 @@ def _stream_partitions_for(src: str, current: int) -> int:
     join drains' state-commit fixed cost was already flat between 4
     and 8), capped at the session's configured
     ``spark.sql.shuffle.partitions`` so a cluster submitter's sizing
-    still wins at scale.  ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS``
-    overrides for deployments whose state size is not input-
-    proportional; a value that is not an integer is ignored.
-    Partitioning only changes WHERE a key's state lives, never per-key
-    results, so emissions are identical.
+    still wins at scale.  Partitioning only changes WHERE a key's state
+    lives, never per-key results, so emissions are identical.
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        try:
-            return max(1, int(env))
-        except ValueError:
-            pass  # malformed override: fall back to the derived count
     try:
         size = sum(
             os.path.getsize(os.path.join(src, f))
@@ -2468,7 +2466,7 @@ FROM ranked WHERE rank <= 3
 """
 
 
-_SQL_STREAM_USER_STATS = """
+_SQL_STREAMING_USER_STATS = """
 SELECT user_id, COUNT(*) AS n_events,
        CAST(SUM(CAST(FLOOR(value * 1000000) AS BIGINT)) AS BIGINT)
          AS value_micros
@@ -3039,7 +3037,7 @@ FROM red
 """, rows
 
 
-def _sql_minhash_sigs_exploded() -> str:
+def _sql_minhash_signatures() -> str:
     """Scalar (doc_id, pos, h) form of the signature oracle — the driver's
     canonicalizer cannot hash list columns, so the correctness query
     explodes the signature on both engines."""
@@ -3088,7 +3086,7 @@ def q_minhash_lsh_pairs_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_lsh_pairs() -> str:
+def _sql_minhash_lsh_pairs() -> str:
     sig_sql, rows = _sql_minhash_sigs()
     return f"""
 WITH sigs AS ({sig_sql}),
@@ -3103,6 +3101,9 @@ SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
 FROM banded l JOIN banded r
   ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id
 """
+
+
+_sql_minhash_lsh_pairs_expr = _sql_minhash_lsh_pairs
 
 
 def q_lsh_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3124,7 +3125,7 @@ def q_lsh_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "source", "n_chars")
 
 
-def _sql_lsh_incremental() -> str:
+def _sql_lsh_dedup_incremental() -> str:
     sig_sql, rows = _sql_minhash_sigs()
     return f"""
 WITH sigs AS ({sig_sql}),
@@ -3167,7 +3168,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_JACCARD = f"""
+_SQL_NGRAM_JACCARD_PAIRS = f"""
 WITH {_D_SH_CTE}, shx AS (
   SELECT doc_id, unnest(shs) AS h FROM sh
 ), sizes AS (
@@ -3385,7 +3386,7 @@ def q_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dup_groups(_t(spark, sf_dir, "documents"))
 
 
-_SQL_EXACT_DUP = """
+_SQL_EXACT_DUP_GROUPS = """
 SELECT md5(text) AS content_hash, MIN(doc_id) AS canonical_id,
        COUNT(*) AS dup_count
 FROM documents GROUP BY 1
@@ -3441,6 +3442,9 @@ FROM documents d LEFT JOIN bits USING (doc_id)
 """
 
 
+_sql_simhash_expr = _sql_simhash
+
+
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: band-bucket blocking (pigeonhole: ≤3-bit
     differences must agree on one of 4 bands) + exact Hamming filter."""
@@ -3487,7 +3491,7 @@ def _sql_components_cte() -> str:
     """Recursive min-reachable-label: the DuckDB twin of the iterative
     Spark propagation (both compute min(node id) per component)."""
     return f"""
-pairs AS MATERIALIZED ({_sql_lsh_pairs()}),
+pairs AS MATERIALIZED ({_sql_minhash_lsh_pairs()}),
 edges AS MATERIALIZED (
   SELECT id_a AS u, id_b AS v FROM pairs
   UNION
@@ -3798,7 +3802,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_top_terms(_t(spark, sf_dir, "documents"), k=3)
 
 
-def _sql_tfidf(k: int = 3) -> str:
+def _sql_tfidf_top_terms(k: int = 3) -> str:
     toks = _D_TOKENS.format(t="text")
     return f"""
 WITH tok AS (
@@ -4023,7 +4027,7 @@ def q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_NORMALIZE = """
+_SQL_NORMALIZE_TEXT = """
 SELECT doc_id,
        trim(regexp_replace(
          regexp_replace(lower(text), '[^a-zA-Z0-9 \\t\\n\\x0b\\f\\r]', ' ', 'g'),
@@ -4175,6 +4179,7 @@ WHERE len(toks) >= 20
         x -> list_contains(['the','and','of'], lower(x))))
         AS DOUBLE) / len(toks) >= 0.01
 """
+_SQL_STREAMING_INGEST = _SQL_QUALITY_FILTER
 
 
 def q_assign_packs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4194,6 +4199,7 @@ SELECT doc_id, n_tokens,
          - n_tokens) // 2048 AS BIGINT) AS pack_id
 FROM t
 """
+_SQL_ASSIGN_PACKS_SCALABLE = _SQL_ASSIGN_PACKS
 
 
 def q_assign_packs_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4255,7 +4261,7 @@ def q_ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_brute_force(emb, queries, k=5, round_decimals=6)
 
 
-_SQL_ANN_BRUTE = f"""
+_SQL_ANN_BRUTE_FORCE = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
            WHERE vec_id % 100 = 0),
 scored AS (
@@ -4408,7 +4414,7 @@ FROM truth t LEFT JOIN (
 
     return f"""
 WITH truth AS (
-  SELECT query_id, neighbor_id FROM ({_SQL_ANN_BRUTE.replace("rn <= 5", "rn <= 2")})
+  SELECT query_id, neighbor_id FROM ({_SQL_ANN_BRUTE_FORCE.replace("rn <= 5", "rn <= 2")})
   WHERE query_id != neighbor_id)
 {ranked(_sql_ann_lsh().replace("rn <= 5", "rn <= 6"), "lsh")}
 UNION ALL
@@ -4542,7 +4548,7 @@ FROM (
     return f"""
 WITH ex AS (
   SELECT query_id, neighbor_id, score
-  FROM ({_SQL_ANN_BRUTE.replace("rn <= 5", "rn <= 4")})
+  FROM ({_SQL_ANN_BRUTE_FORCE.replace("rn <= 5", "rn <= 4")})
   WHERE query_id != neighbor_id),
 truth0 AS (
   SELECT query_id, neighbor_id,
@@ -4754,6 +4760,9 @@ WHERE rn <= {k}
 """
 
 
+_sql_ann_ivf_indexed = _sql_ann_ivf
+
+
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval-quality report: recall@5 of the two approximate ANN
     paths (LSH random-hyperplane buckets, n_planes=8; IVF strided
@@ -4806,7 +4815,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_ann_recall() -> str:
     return f"""
-WITH exact AS (SELECT query_id, neighbor_id FROM ({_SQL_ANN_BRUTE})),
+WITH exact AS (SELECT query_id, neighbor_id FROM ({_SQL_ANN_BRUTE_FORCE})),
 l AS (SELECT query_id, neighbor_id FROM ({_sql_ann_lsh()})),
 v AS (SELECT query_id, neighbor_id FROM ({_sql_ann_ivf()})),
 tot AS (SELECT COUNT(*) AS n_exact FROM exact),
@@ -4898,9 +4907,9 @@ WITH kw AS (
   SELECT CAST(0 AS BIGINT) AS query_id, doc_id AS neighbor_id,
          CAST(ROW_NUMBER() OVER (ORDER BY score_fp DESC, doc_id)
               AS INTEGER) AS rank
-  FROM ({_SQL_BM25})),
+  FROM ({_SQL_BM25_SEARCH})),
 dn AS (
-  SELECT query_id, neighbor_id, rank FROM ({_SQL_ANN_BRUTE})
+  SELECT query_id, neighbor_id, rank FROM ({_SQL_ANN_BRUTE_FORCE})
   WHERE query_id = 0),
 u AS (SELECT * FROM kw UNION ALL SELECT * FROM dn),
 s AS (
@@ -4964,7 +4973,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("doc_id", "n_bytes", "content_md5")
 
 
-_SQL_MULTIMODAL = """
+_SQL_MULTIMODAL_FEATURES = """
 SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
        md5(text) AS content_md5
 FROM documents
@@ -6039,7 +6048,7 @@ def q_filename_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_filename_partition(df).select("id", "yyyy", "mm")
 
 
-_SQL_FNAME_PARTITION = """
+_SQL_FILENAME_PARTITION = """
 SELECT r_regionkey AS id, yyyy, mm
 FROM region CROSS JOIN (VALUES ('2024', '03'), ('2024', '11'),
                                ('misc', '00')) t(yyyy, mm)
@@ -6071,7 +6080,7 @@ def q_ctas_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CTAS = """
+_SQL_CTAS_ROUNDTRIP = """
 SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS yr,
        o_orderpriority AS priority, COUNT(*) AS n_orders
 FROM orders GROUP BY 1, 2
@@ -6161,7 +6170,7 @@ def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DRIFT = """
+_SQL_DISTRIBUTION_DRIFT = """
 WITH a AS (
   SELECT CAST(FLOOR(value / 8.0) AS BIGINT) AS bin, COUNT(*) AS n_a
   FROM events WHERE event_type = 'click' GROUP BY 1),
@@ -6305,8 +6314,8 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_lsh_recall() -> str:
     return f"""
-WITH truth AS (SELECT id_a, id_b FROM ({_SQL_JACCARD})),
-cand AS (SELECT id_a, id_b FROM ({_sql_lsh_pairs()})),
+WITH truth AS (SELECT id_a, id_b FROM ({_SQL_NGRAM_JACCARD_PAIRS})),
+cand AS (SELECT id_a, id_b FROM ({_sql_minhash_lsh_pairs()})),
 hit AS (SELECT * FROM truth INTERSECT SELECT * FROM cand),
 c AS (SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
              (SELECT COUNT(*) FROM cand) AS n_candidates,
@@ -6437,7 +6446,7 @@ def _d_zterms() -> str:
     return " + ".join(parts)
 
 
-_SQL_ZORDER = f"""
+_SQL_ZORDER_KEY = f"""
 WITH k AS (
   SELECT c_custkey,
          CAST(c_custkey % 4096 AS BIGINT) AS x,
@@ -6602,7 +6611,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "source", "n_chars")
 
 
-_SQL_COMPACT = """
+_SQL_COMPACT_ROUNDTRIP = """
 SELECT doc_id, lang, source, n_chars FROM documents
 """
 
@@ -6638,7 +6647,7 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_VARIANT = """
+_SQL_VARIANT_EXTRACT = """
 WITH j AS (
   SELECT '{"meta":{"type":"' || event_type || '","uid":'
          || CAST(user_id AS VARCHAR) || '},"payload":' || props || '}'
@@ -6791,7 +6800,7 @@ FROM b
 """
 
 
-_SQL_INTERFACE_TEXT = """
+_SQL_SQL_INTERFACE = """
 SELECT l_returnflag, l_linestatus,
        CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
        CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
@@ -6816,7 +6825,7 @@ def q_sql_interface(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_testdata(spark, sf_dir, tables=("lineitem",))
-    return spark.sql(_SQL_INTERFACE_TEXT)
+    return spark.sql(_SQL_SQL_INTERFACE)
 
 
 def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6894,7 +6903,7 @@ def q_cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CUBE = """
+_SQL_CUBE_AGG = """
 SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
        CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,4))), 2) AS DOUBLE)
          AS sum_qty
@@ -7171,7 +7180,7 @@ def _d_profile_col(c: str, kind: str) -> str:
     )
 
 
-_SQL_PROFILE = " UNION ALL ".join(
+_SQL_PROFILE_TABLE = " UNION ALL ".join(
     _d_profile_col(c, k)
     for c, k in [
         ("o_orderkey", "int"),
@@ -7785,7 +7794,7 @@ def q_constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CONSTRAINTS = """
+_SQL_CONSTRAINT_VIOLATIONS = """
 SELECT 'not_null:o_custkey' AS rule,
        CAST(COALESCE(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT)
          AS n_violations FROM orders
@@ -7852,7 +7861,7 @@ def q_having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_HAVING = """
+_SQL_HAVING_FILTER = """
 SELECT o_custkey, c_name, n_orders,
        CAST(spend AS DOUBLE) AS total_spend
 FROM (
@@ -7881,7 +7890,7 @@ def q_count_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_COUNT_DISTINCT = """
+_SQL_COUNT_DISTINCT_AGG = """
 SELECT p_brand, COUNT(DISTINCT l_suppkey) AS n_suppliers,
        COUNT(*) AS n_lineitems
 FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -7947,7 +7956,7 @@ def q_below_avg_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_BELOW_AVG = """
+_SQL_BELOW_AVG_FILTER = """
 WITH per_part AS (
   SELECT l_partkey AS pk, SUM(CAST(l_quantity AS DECIMAL(18,4))) AS sum_qty,
          COUNT(*) AS cnt
@@ -8023,7 +8032,7 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SCD2 = """
+_SQL_SCD2_HISTORY = """
 WITH src AS (
   SELECT user_id, ts, event_id, event_type FROM events
   WHERE user_id % 50 = 0
@@ -8129,7 +8138,7 @@ def q_range_frame_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_RANGE_FRAME = """
+_SQL_RANGE_FRAME_WINDOW = """
 SELECT event_id, event_type, CAST(epoch_us(ts) AS BIGINT) AS ts_us,
        COUNT(*) OVER (PARTITION BY event_type ORDER BY epoch_us(ts)
                       RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
@@ -8188,9 +8197,6 @@ r{k} AS (
     )
 
 
-_SQL_PAGERANK = _sql_pagerank()
-
-
 def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS (TPC-H Q4 shape): count orders per priority
     that have at least one deep-discount line.  Spark plan: the EXISTS
@@ -8210,7 +8216,7 @@ def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_EXISTS = """
+_SQL_EXISTS_SUBQUERY = """
 SELECT o_orderpriority, COUNT(*) AS order_count
 FROM orders o
 WHERE EXISTS (SELECT 1 FROM lineitem l
@@ -8256,7 +8262,7 @@ def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SCALAR_SUBQ = """
+_SQL_SCALAR_SUBQUERY = """
 WITH pos AS (
   SELECT c_custkey, c_nationkey,
          CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS cents
@@ -8356,7 +8362,7 @@ def q_ntile_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_NTILE = """
+_SQL_NTILE_WINDOWS = """
 WITH base AS (
   SELECT c_custkey, c_mktsegment,
          CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS cents
@@ -8389,7 +8395,7 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assign_nearest_centroid(emb, cents, round_decimals=6)
 
 
-_SQL_KMEANS = f"""
+_SQL_KMEANS_ASSIGN = f"""
 WITH k AS (SELECT vec_id AS centroid_id, embedding AS kv
            FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 2000),
 scored AS (
@@ -8414,7 +8420,7 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fuzzy_key_pairs(s, key_col="s_name", id_col="s_suppkey")
 
 
-_SQL_FUZZY = """
+_SQL_FUZZY_JOIN = """
 SELECT a.s_suppkey AS id_a, b.s_suppkey AS id_b,
        a.s_name AS key_a, b.s_name AS key_b,
        CAST(levenshtein(a.s_name, b.s_name) AS INTEGER) AS dist
@@ -8430,7 +8436,7 @@ def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantize_embeddings(_t(spark, sf_dir, "embeddings"))
 
 
-_SQL_QUANTIZE = """
+_SQL_QUANTIZE_EMBEDDINGS = """
 WITH v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
   FROM embeddings),
@@ -9553,6 +9559,9 @@ WHERE a.doc_id IS NULL OR b.doc_id IS NULL OR a.h != b.h
 """
 
 
+_sql_versioned_roundtrip = _sql_row_diff
+
+
 def q_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D Pareto front (operators/analytics.pareto_front_2d): parts
     not dominated under (minimize retail price, maximize size) — the
@@ -9948,7 +9957,7 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_signals(rebuilt)
 
 
-_SQL_REPETITION = """
+_SQL_REPETITION_SIGNALS = """
 WITH toks AS (
   SELECT doc_id, generate_subscripts(l, 1) AS tpos, unnest(l) AS tok
   FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)),
@@ -10073,7 +10082,7 @@ def q_build_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return build_vocab(_t(spark, sf_dir, "documents"), min_count=2)
 
 
-_SQL_VOCAB = """
+_SQL_BUILD_VOCAB = """
 WITH t AS (SELECT unnest(regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS token FROM documents),
 c AS (SELECT token, COUNT(*) AS cnt FROM t WHERE token <> '' GROUP BY 1
       HAVING COUNT(*) >= 2)
@@ -10095,7 +10104,7 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_JACCARD_PREFIX = """
+_SQL_JACCARD_PREFIX_JOIN = """
 WITH t AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS token
            FROM documents),
 tok AS (SELECT DISTINCT doc_id, token FROM t WHERE token <> ''),
@@ -10346,7 +10355,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_BM25 = """
+_SQL_BM25_SEARCH = """
 WITH t AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS token
            FROM documents),
 tt AS (SELECT doc_id, token FROM t WHERE token <> ''),
@@ -10528,7 +10537,7 @@ JOIN (SELECT cid, COUNT(*) AS n_members FROM a3 GROUP BY 1) m
 """
 
 
-_SQL_COHORT = """
+_SQL_COHORT_RETENTION = """
 WITH wk AS (
   SELECT user_id AS u,
          CAST(FLOOR(date_diff('day', DATE '1970-01-01',
@@ -14661,7 +14670,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_split_leakage() -> str:
     return f"""
-WITH pairs AS (SELECT id_a, id_b FROM ({_sql_lsh_pairs()})),
+WITH pairs AS (SELECT id_a, id_b FROM ({_sql_minhash_lsh_pairs()})),
 sp AS (
   SELECT doc_id,
          CASE WHEN b < 8000 THEN 'train'
@@ -20416,6 +20425,7 @@ SELECT event_type, CAST(hr AS BIGINT) AS hr, n,
        CAST(y AS BIGINT) AS ewma
 FROM fold
 """
+_SQL_STREAMING_EWMA = _SQL_EWMA_SMOOTH
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -20787,980 +20797,42 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_reconciliation(spark, "/root/testdata/sf0.001")
 
 
-#: Round-13 driver-window lead (the driver signs the FIRST 50 entries
-#: of queries()), executing the rotation plan declared in COVERAGE.md:
-#: first the two queries whose ENGINE code changed this round (the
-#: ADVICE-r12 division-parity revert in operators/analytics._truncdiv —
-#: DuckDB integer `//` truncates, so the r12 floor "fix" was itself
-#: the divergence; both re-verified green against the sf0.01 oracle at
-#: change time), then the four oracle-robustness promotions from the
-#: round-13 whitespace-tokenization audit (oracles re-tokenized on
-#: \\s+ / whitespace-collapsed to match the engine's tokens_ws /
-#: strip_latex contracts; the two other changed oracles, bm25_search
-#: and build_vocab, already sit in the r4 head below, and oov_rate in
-#: the r12-additions block — all six re-verified green BOTH on the
-#: real sf0.01 fixtures and on a doctored tab/newline/multi-space
-#: variant), then the two edge-fixture oracle fixes (empty/blank
-#: documents: augment_dropout, mbox_extract — tools/fragility_audit.py
-#: edge mode), then the twelve round-12 additions that have never
-#: carried a driver-signed row (all 12 judge-verified green in VERDICT
-#: r12's bare sweep; three of them — streaming_ewma, hits_scores,
-#: oov_rate — also had code/oracle robustness fixes this round), then
-#: the 22 queries whose latest signature is round 3, then the
-#: alphabetical head (8 of 48) of the r4-signed block.  The remaining
-#: 40 r4 names lead the round-14 window.
-#: Round-14 driver-window lead, executing the COVERAGE.md rotation
-#: with the declared precedence (changed queries promote to the window
-#: head at change time; displaced rotation names roll forward):
-#:
-#: 1. The 17 graph-backed queries whose ENGINE code changed (every
-#:    operators/graph.py lineage cut routes through
-#:    lineage.cut_lineage — reliable checkpoint when a checkpoint dir
-#:    is set, localCheckpoint otherwise).
-#: 2. The 19 queries whose ENGINE code changed in the round-14
-#:    NULL-text contract adoption (token counters on NULL-propagating
-#:    array_size — never legacy size's -1 — NULL-guarded transforms,
-#:    exact-Int64 Arrow simhash batches; gated by
-#:    tools/fragility_audit.py null mode, 44/44 + media-raise checks).
-#: 3. The oldest-driver-signature names from the vertical-tab
-#:    whitespace-class oracle wave (every DuckDB-oracle \s — split,
-#:    collapse, negated punct classes — replaced by the explicit
-#:    Java-semantics class [ \t\n\x0b\f\r]; ws audit now injects
-#:    VT bytes, 30/30).  The shared helpers fan the two waves out to
-#:    92 changed names — more than one 50-slot window — so the
-#:    remaining 42 changed names (r5-r13 signatures, oldest first)
-#:    are the declared round-15 window head, ahead of the 31
-#:    unchanged r4-signed rotation names; ALL 92 were bare-verified
-#:    green against the sf0.01 oracle at change time this round (see
-#:    COVERAGE.md round-14 section).
-_R14_WINDOW = [
-    # -- 1. engine code: cut_lineage swap (17) -------------------------
-    "near_dup_components", "near_dup_dedup", "pagerank",
-    "dedup_keep_best", "dedup_report", "image_dedup",
-    "flatten_hierarchy", "triangle_count", "k_core",
-    "label_propagation", "bfs_hops", "hits_scores",
+#: The driver checks the first 50 entries of queries(), so this window
+#: is frozen: the queries whose engine or oracle changed last (the
+#: cut_lineage graph queries, the NULL-text contract consumers, and the
+#: rest of the change set listed in COVERAGE.md's round-14 section).
+_DRIVER_WINDOW = (
+    "near_dup_components", "near_dup_dedup", "pagerank", "dedup_keep_best",
+    "dedup_report", "image_dedup", "flatten_hierarchy", "triangle_count",
+    "k_core", "label_propagation", "bfs_hops", "hits_scores",
     "graph_assortativity", "clustering_coeff", "adamic_adar",
-    "link_prediction", "density_clusters",
-    # -- 2. engine code: NULL-text contract consumers (19) -------------
-    "assign_packs", "assign_packs_scalable", "augment_dropout",
-    "bucketed_packs", "chunk_documents", "contrastive_pairs",
-    "corpus_report", "html_extract", "mix_sources",
-    "ngram_model_score", "quality_filter", "readability",
+    "link_prediction", "density_clusters", "assign_packs",
+    "assign_packs_scalable", "augment_dropout", "bucketed_packs",
+    "chunk_documents", "contrastive_pairs", "corpus_report", "html_extract",
+    "mix_sources", "ngram_model_score", "quality_filter", "readability",
     "remove_duplicate_spans", "select_until_budget", "simhash",
-    "simhash_pairs", "temperature_mix", "text_quality",
-    "token_counts",
-    # -- 3. oracle-only changes, oldest driver signature first (5) -----
+    "simhash_pairs", "temperature_mix", "text_quality", "token_counts",
     "duplicate_spans", "lsh_dedup_incremental", "simhash_expr",
-    "span_dup_stats", "training_pipeline",
-    # -- 4. zero-row-slice hardening, wave 1: the four changed names
-    # whose new code/oracle EXECUTES on the non-empty driver fixture
-    # (IVF _schema sidecar read; grouped point-estimate agg; empty-
-    # safe seed collect + EXISTS-guarded oracle; HAVING grand-total
-    # pin). ------------------------------------------------------------
-    "ann_ivf_indexed", "bootstrap_ci", "kcenter_coreset", "rollup",
-    # -- 5. zero-row-slice hardening, wave 2 (orders/customer/dims
-    # stages): the five changed names with result-path changes that
-    # execute on the non-empty fixture — CTAS read now prefers the
-    # _schema sidecar; constraint sums coalesce to 0; profile reprs
-    # NULL-guard the Java Formatter "nu" bug; Holt fold and the
-    # permutation counter moved to constant-key grouped aggregates.
-    # The remaining changed names (dir-hygiene / fallback-path only)
-    # head the r15 queue — see COVERAGE.md round-14 section. -----------
-    "ctas_roundtrip", "constraint_violations", "profile_table",
-    "holt_forecast", "permutation_test",
-]
-
-
-_R13_WINDOW = [
-    # -- round-13 engine-code changes (ADVICE r12 trunc-div revert) ----
-    "ips_eval", "cuped_eval",
-    # -- round-13 oracle robustness fixes (whitespace-tokenization
-    # audit on doctored tab/newline/multi-space documents — the other
-    # two changed oracles, bm25_search and build_vocab, are already
-    # below in the r4 head; oov_rate is in the r12-additions block) ---
-    "jaccard_prefix_join", "rare_tokens", "naive_bayes", "latex_strip",
-    # -- round-13 edge-fixture oracle fixes (empty/blank documents:
-    # DuckDB array_to_string([]) NULL vs Spark '' in augment_dropout;
-    # mbox reader trailing-newline rstrip in mbox_extract) -------------
-    "augment_dropout", "mbox_extract",
-    # -- round-12 additions, never driver-signed (12) ------------------
-    "hits_scores", "graph_assortativity", "herfindahl_index",
-    "ewma_smooth", "clustering_coeff", "adamic_adar", "prop_ztest",
-    "streaming_ewma", "oov_rate", "anova_f", "cross_correlation",
-    "sax_symbols",
-    # -- latest signature round 3 (22) ---------------------------------
-    "kmeans_train", "market_share", "merge_upsert",
-    "minhash_signatures", "multimodal_features", "orc_roundtrip",
-    "order_by_limit", "pagerank", "profile_table",
-    "quantize_embeddings", "reconciliation", "resample_ffill",
-    "scd2_history", "session_window", "sessionize",
-    "stratified_sample", "streaming_tumbling", "top1_per_group",
-    "tumbling_window", "volume_shipping", "waiting_suppliers",
-    "xml_shred",
-    # -- latest signature round 4, head of the block (8 of 48) ---------
-    "ann_ivf_indexed", "ann_rrf", "assign_packs",
-    "assign_packs_scalable", "below_avg_filter", "bm25_search",
-    "build_vocab", "collect_sorted",
-]
+    "span_dup_stats", "training_pipeline", "ann_ivf_indexed",
+    "bootstrap_ci", "kcenter_coreset", "rollup", "ctas_roundtrip",
+    "constraint_violations", "profile_table", "holt_forecast",
+    "permutation_test",
+)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordered so the driver's 50-query correctness window carries the
-    most NEW signal each round: the round-14 window (_R14_WINDOW — the
-    cut_lineage graph promotions, then the whitespace-class oracle wave
-    oldest-signature-first per the COVERAGE.md rotation plan) leads,
-    then the round-13 window order, then the prior queue order."""
-    base = _queries_r10_order()
-    out = {name: base[name] for name in _R14_WINDOW}
-    out.update({name: base[name] for name in _R13_WINDOW})
-    out.update(base)
-    return out
-
-
-def _queries_r10_order() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Round-10 layout (kept as the stable tail order):
-
-    - the 14 round-9 late additions that had never carried a
-      driver-signed CORRECTNESS row lead (all 14 judge-verified green
-      in VERDICT r9's bare-session sweep).
-    - round-10 queries right after, so they also landed inside the
-      50-query window.
-    - then everything driver-signed green in rounds 2-9, prior order
-      preserved (the round-9 window block first, then the r2-r8
-      queue).
-    """
-    return {
-        # -- round-10 driver window: the 14 round-9 late additions
-        # never driver-signed (judge-verified green in VERDICT r9) ----
-        "cross_source_dups": q_cross_source_dups,
-        "kmv_overlap": q_kmv_overlap,
-        "ngram_search": q_ngram_search,
-        "latex_strip": q_latex_strip,
-        "bitext_mine": q_bitext_mine,
-        "stl_decompose": q_stl_decompose,
-        "kcenter_coreset": q_kcenter_coreset,
-        "bpe_fertility": q_bpe_fertility,
-        "blocking_eval": q_blocking_eval,
-        "streaming_enrich": q_streaming_enrich,
-        "streaming_upsert": q_streaming_upsert,
-        "image_patches_real": q_image_patches_real,
-        "audio_resample_real": q_audio_resample_real,
-        "rfm_segments": q_rfm_segments,
-        # -- round-10 session additions land here (inside the window) --
-        "global_rank": q_global_rank,
-        "fim_transform": q_fim_transform,
-        "streaming_outer_join": q_streaming_outer_join,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "isotonic_calibration": q_isotonic_calibration,
-        "rendezvous_shards": q_rendezvous_shards,
-        "aiff_meta_real": q_aiff_meta_real,
-        "pcap_extract": q_pcap_extract,
-        "tfrecord_roundtrip": q_tfrecord_roundtrip,
-        "ulid_generate": q_ulid_generate,
-        "shuffle_quality": q_shuffle_quality,
-        "randomized_response": q_randomized_response,
-        "cdc_chunks": q_cdc_chunks,
-        "facility_location": q_facility_location,
-        "quantile_normalize": q_quantile_normalize,
-        "skyline": q_skyline,
-        "label_propagation": q_label_propagation,
-        "bfs_hops": q_bfs_hops,
-        "gaps_islands": q_gaps_islands,
-        "woe_encoding": q_woe_encoding,
-        "lof_outliers": q_lof_outliers,
-        "mutual_info": q_mutual_info,
-        "weighted_topk_sample": q_weighted_topk_sample,
-        "fs_weights": q_fs_weights,
-        "pca_project": q_pca_project,
-        "grouped_mode": q_grouped_mode,
-        "rake_keywords": q_rake_keywords,
-        "sequence_gaps": q_sequence_gaps,
-        "allen_relations": q_allen_relations,
-        "skipgram_pairs": q_skipgram_pairs,
-        "fd_check": q_fd_check,
-        "streaming_topk": q_streaming_topk,
-        "good_turing": q_good_turing,
-        "ips_eval": q_ips_eval,
-        "zipf_fit": q_zipf_fit,
-        "nelson_aalen": q_nelson_aalen,
-        "term_burstiness": q_term_burstiness,
-        "transition_entropy": q_transition_entropy,
-        "centroid_novelty": q_centroid_novelty,
-        "cuped_eval": q_cuped_eval,
-        "sorted_neighborhood": q_sorted_neighborhood,
-        "maxsim_retrieval": q_maxsim_retrieval,
-        "resample_interp": q_resample_interp,
-        "fair_interleave": q_fair_interleave,
-        # ---- driver-signed green r2-r9; prior order preserved --------
-        "holt_forecast": q_holt_forecast,
-        "xlsx_roundtrip": q_xlsx_roundtrip,
-        "domain_rollup": q_domain_rollup,
-        "avro_roundtrip": q_avro_roundtrip,
-        "fixed_width_roundtrip": q_fixed_width_roundtrip,
-        "parquet_stats": q_parquet_stats,
-        "point_in_polygon": q_point_in_polygon,
-        "merge_intervals": q_merge_intervals,
-        "schema_evolution": q_schema_evolution,
-        "mahalanobis": q_mahalanobis,
-        "golden_record": q_golden_record,
-        "media_sniff": q_media_sniff,
-        "mp4_frames_real": q_mp4_frames_real,
-        "url_dedup": q_url_dedup,
-        "m4a_meta_real": q_m4a_meta_real,
-        "vtt_parse_real": q_vtt_parse_real,
-        "mkv_frames_real": q_mkv_frames_real,
-        "ogg_meta_real": q_ogg_meta_real,
-        "robots_audit": q_robots_audit,
-        "webdataset_roundtrip": q_webdataset_roundtrip,
-        "id3_tags_real": q_id3_tags_real,
-        "charset_sniff": q_charset_sniff,
-        "docx_extract": q_docx_extract,
-        "warc_gz_roundtrip": q_warc_gz_roundtrip,
-        "embargo_split": q_embargo_split,
-        "ip_anonymize": q_ip_anonymize,
-        "join_skew": q_join_skew,
-        "matryoshka_eval": q_matryoshka_eval,
-        "lag_features": q_lag_features,
-        "warc_http_roundtrip": q_warc_http_roundtrip,
-        "sqlite_roundtrip": q_sqlite_roundtrip,
-        "pdf_extract": q_pdf_extract,
-        "arrow_ipc_roundtrip": q_arrow_ipc_roundtrip,
-        "mbox_extract": q_mbox_extract,
-        "kaplan_meier": q_kaplan_meier,
-        "webp_meta_real": q_webp_meta_real,
-        "heaps_law": q_heaps_law,
-        "xz_jsonl_roundtrip": q_xz_jsonl_roundtrip,
-        "media_pipeline": q_media_pipeline,
-        "approx_profile": q_approx_profile,
-        # -- round-9 session additions (inside the driver window) -------
-        "ngram_novelty": q_ngram_novelty,
-        "dsir_importance": q_dsir_importance,
-        "t_closeness": q_t_closeness,
-        "audio_frames_real": q_audio_frames_real,
-        "image_histogram_real": q_image_histogram_real,
-        "zip_roundtrip": q_zip_roundtrip,
-        "mase_eval": q_mase_eval,
-        "bloom_semi_join": q_bloom_semi_join,
-        "group_kfold": q_group_kfold,
-        "lateness_profile": q_lateness_profile,
-        "ab_test": q_ab_test,
-        "split_leakage": q_split_leakage,
-        "video_frames_real": q_video_frames_real,
-        "wap_publish": q_wap_publish,
-        "jpeg_color_real": q_jpeg_color_real,
-        "png_color_real": q_png_color_real,
-        "cluster_eval": q_cluster_eval,
-        "zstd_roundtrip": q_zstd_roundtrip,
-        "g711_decode_real": q_g711_decode_real,
-        "raster_decode_real": q_raster_decode_real,
-        "tiff_decode_real": q_tiff_decode_real,
-        "adpcm_decode_real": q_adpcm_decode_real,
-        "cms_frequency": q_cms_frequency,
-        "kmv_distinct": q_kmv_distinct,
-        "geohash_tiles": q_geohash_tiles,
-        "acf_daily": q_acf_daily,
-        "midi_decode_real": q_midi_decode_real,
-        "theil_sen": q_theil_sen,
-        "webdataset_export": q_webdataset_export,
-        "unicode_normalize": q_unicode_normalize,
-        "jackknife_se": q_jackknife_se,
-        "cohens_kappa": q_cohens_kappa,
-        "hashed_features": q_hashed_features,
-        "permutation_test": q_permutation_test,
-        "markdown_strip": q_markdown_strip,
-        "approx_quantile_contract": q_approx_quantile_contract,
-        "k_core": q_k_core,
-        "chi2_independence": q_chi2_independence,
-        "luhn_mask": q_luhn_mask,
-        "k_anonymize": q_k_anonymize,
-        "spearman": q_spearman,
-        "mann_whitney": q_mann_whitney,
-        "ks_test": q_ks_test,
-        "target_encode": q_target_encode,
-        "hilbert_key": q_hilbert_key,
-        "mp3_meta_real": q_mp3_meta_real,
-        "bmp_decode_real": q_bmp_decode_real,
-        "exif_extract_real": q_exif_extract_real,
-        "warc_roundtrip": q_warc_roundtrip,
-        "ols_regression": q_ols_regression,
-        "link_prediction": q_link_prediction,
-        "kendall_tau": q_kendall_tau,
-        "gini_gain": q_gini_gain,
-        "calibration": q_calibration,
-        "bootstrap_ci": q_bootstrap_ci,
-        "readability": q_readability,
-        "srt_parse_real": q_srt_parse_real,
-        "image_phash": q_image_phash,
-        "naive_bayes": q_naive_bayes,
-        "density_clusters": q_density_clusters,
-        "order_totals": q_order_totals,
-        "streaming_sliding": q_streaming_sliding,
-        "contrastive_pairs": q_contrastive_pairs,
-        "language_confusion": q_language_confusion,
-        "seasonality": q_seasonality,
-        "source_keywords": q_source_keywords,
-        "doc_features": q_doc_features,
-        "sequence_match": q_sequence_match,
-        "decayed_sum": q_decayed_sum,
-        "normalized_dup_gain": q_normalized_dup_gain,
-        "quantile_bins": q_quantile_bins,
-        "dedup_keep_best": q_dedup_keep_best,
-        "contingency": q_contingency,
-        "running_distinct": q_running_distinct,
-        "jdbc_roundtrip": q_jdbc_roundtrip,
-        "jpeg_decode_real": q_jpeg_decode_real,
-        "ann_ndcg": q_ann_ndcg,
-        "quality_roc": q_quality_roc,
-        "shuffle_shards": q_shuffle_shards,
-        "pq_encode": q_pq_encode,
-        "pq_search": q_pq_search,
-        "record_linkage": q_record_linkage,
-        "materialize_epoch": q_materialize_epoch,
-        "image_dhash_pairs": q_image_dhash_pairs,
-        "epoch_pipeline": q_epoch_pipeline,
-        "row_diff": q_row_diff,
-        "pareto_front": q_pareto_front,
-        "frequent_pairs": q_frequent_pairs,
-        "ivf_pq_search": q_ivf_pq_search,
-        "image_dedup": q_image_dedup,
-        "versioned_roundtrip": q_versioned_roundtrip,
-        "cdc_rollup": q_cdc_rollup,
-        "augment_dropout": q_augment_dropout,
-        "k_anonymity": q_k_anonymity,
-        "twap": q_twap,
-        "ohlc": q_ohlc,
-        "gini": q_gini,
-        "benford": q_benford,
-        "observed_write": q_observed_write,
-        "schema_drift": q_schema_drift,
-        "clustered_write": q_clustered_write,
-        "triangle_count": q_triangle_count,
-        "l_diversity": q_l_diversity,
-        "corr_matrix": q_corr_matrix,
-        "cusum_shift": q_cusum_shift,
-        "hll_distinct": q_hll_distinct,
-        "url_extract": q_url_extract,
-        "jpeg_progressive_real": q_jpeg_progressive_real,
-        "gif_frames_real": q_gif_frames_real,
-        "flac_decode_real": q_flac_decode_real,
-        "bpe_train": q_bpe_train,
-        "bpe_segment": q_bpe_segment,
-        "winsorize": q_winsorize,
-        "streaming_join": q_streaming_join,
-        "action_sequences": q_action_sequences,
-        "negative_samples": q_negative_samples,
-        "corpus_report": q_corpus_report,
-        "ngram_model_score": q_ngram_model_score,
-        "streaming_dedup": q_streaming_dedup,
-        "promo_revenue": q_promo_revenue,
-        "top_supplier": q_top_supplier,
-        "min_cost_supplier": q_min_cost_supplier,
-        "forecast_revenue": q_forecast_revenue,
-        "important_parts": q_important_parts,
-        "promo_suppliers": q_promo_suppliers,
-        "minhash_lsh_pairs_expr": q_minhash_lsh_pairs_expr,
-        "semantic_dedup": q_semantic_dedup,
-        "remove_duplicate_spans": q_remove_duplicate_spans,
-        "temperature_mix": q_temperature_mix,
-        "skew_report": q_skew_report,
-        "token_entropy": q_token_entropy,
-        "tokenize_pack": q_tokenize_pack,
-        "interval_concurrency": q_interval_concurrency,
-        "incremental_recompute": q_incremental_recompute,
-        "audio_decode_real": q_audio_decode_real,
-        "mad_outliers": q_mad_outliers,
-        "ann_lsh_multi": q_ann_lsh_multi,
-        "action_transitions": q_action_transitions,
-        "contamination_report": q_contamination_report,
-        "attribution": q_attribution,
-        "heavy_hitters": q_heavy_hitters,
-        "fk_containment": q_fk_containment,
-        "flatten_hierarchy": q_flatten_hierarchy,
-        "dedup_report": q_dedup_report,
-        "hybrid_search": q_hybrid_search,
-        "streaming_ingest": q_streaming_ingest,
-        "table_digest": q_table_digest,
-        "lsh_recall": q_lsh_recall,
-        "power_iteration": q_power_iteration,
-        "group_split": q_group_split,
-        "merge_aggregate": q_merge_aggregate,
-        "bucketed_packs": q_bucketed_packs,
-        "sql_interface": q_sql_interface,
-        "image_augment_real": q_image_augment_real,
-        "dup_weights": q_dup_weights,
-        "collocations": q_collocations,
-        "ann_mrr": q_ann_mrr,
-        "containment_pairs": q_containment_pairs,
-        "daily_anomalies": q_daily_anomalies,
-        "multimodal_decode_real": q_multimodal_decode_real,
-        "assign_packs": q_assign_packs,
-        "assign_packs_scalable": q_assign_packs_scalable,
-        "word_stats": q_word_stats,
-        "grouped_median": q_grouped_median,
-        "histogram": q_histogram,
-        "bm25_search": q_bm25_search,
-        "duplicate_spans": q_duplicate_spans,
-        "span_dup_stats": q_span_dup_stats,
-        "mix_sources": q_mix_sources,
-        "select_until_budget": q_select_until_budget,
-        "simhash_expr": q_simhash_expr,
-        "lsh_dedup_incremental": q_lsh_dedup_incremental,
-        "streaming_session": q_streaming_session,
-        "streaming_user_stats": q_streaming_user_stats,
-        "ann_ivf_indexed": q_ann_ivf_indexed,
-        "snapshot_diff": q_snapshot_diff,
-        "training_pipeline": q_training_pipeline,
-        "ann_rrf": q_ann_rrf,
-        "weighted_sample": q_weighted_sample,
-        "product_profit": q_product_profit,
-        "grouped_quantiles": q_grouped_quantiles,
-        "iqr_outliers": q_iqr_outliers,
-        "constraint_violations": q_constraint_violations,
-        "having_filter": q_having_filter,
-        "count_distinct_agg": q_count_distinct_agg,
-        "null_safe_join": q_null_safe_join,
-        "below_avg_filter": q_below_avg_filter,
-        "collect_sorted": q_collect_sorted,
-        "range_frame_window": q_range_frame_window,
-        "exists_subquery": q_exists_subquery,
-        "scalar_subquery": q_scalar_subquery,
-        "line_dedup": q_line_dedup,
-        "ntile_windows": q_ntile_windows,
-        "salted_join": q_salted_join,
-        "repetition_signals": q_repetition_signals,
-        "build_vocab": q_build_vocab,
-        "zscore": q_zscore,
-        "html_extract": q_html_extract,
-        "rare_tokens": q_rare_tokens,
-        "embedding_dim_profile": q_embedding_dim_profile,
-        "distribution_drift": q_distribution_drift,
-        "zorder_key": q_zorder_key,
-        "variant_extract": q_variant_extract,
-        "returned_items": q_returned_items,
-        "priority_shipmode": q_priority_shipmode,
-        "customer_distribution": q_customer_distribution,
-        "disjunctive_pred": q_disjunctive_pred,
-        "xml_shred": q_xml_shred,
-        "reconciliation": q_reconciliation,
-        "top1_per_group": q_top1_per_group,
-        "tumbling_window": q_tumbling_window,
-        "session_window": q_session_window,
-        "minhash_signatures": q_minhash_signatures,
-        "streaming_tumbling": q_streaming_tumbling,
-        "ann_brute_force": q_ann_brute_force,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        "ann_recall": q_ann_recall,
-        "embedding_near_dup": q_embedding_near_dup,
-        "kmeans_assign": q_kmeans_assign,
-        "kmeans_train": q_kmeans_train,
-        "quantize_embeddings": q_quantize_embeddings,
-        "contamination_hits": q_contamination_hits,
-        "decontaminate": q_decontaminate,
-        "fuzzy_join": q_fuzzy_join,
-        "jaccard_prefix_join": q_jaccard_prefix_join,
-        "stratified_sample": q_stratified_sample,
-        "multimodal_features": q_multimodal_features,
-        "frame_sample": q_frame_sample,
-        "csv_roundtrip": q_csv_roundtrip,
-        "filename_partition": q_filename_partition,
-        "ctas_roundtrip": q_ctas_roundtrip,
-        "jsonl_roundtrip": q_jsonl_roundtrip,
-        "orc_roundtrip": q_orc_roundtrip,
-        "compact_roundtrip": q_compact_roundtrip,
-        "merge_upsert": q_merge_upsert,
-        "gdpr_delete": q_gdpr_delete,
-        "sessionize": q_sessionize,
-        "funnel": q_funnel,
-        "cohort_retention": q_cohort_retention,
-        "pagerank": q_pagerank,
-        "scd2_history": q_scd2_history,
-        "grouping_sets": q_grouping_sets,
-        "resample_ffill": q_resample_ffill,
-        "order_by_limit": q_order_by_limit,
-        "cube_agg": q_cube_agg,
-        "profile_table": q_profile_table,
-        "volume_shipping": q_volume_shipping,
-        "market_share": q_market_share,
-        "waiting_suppliers": q_waiting_suppliers,
-        "pricing_summary": q_pricing_summary,
-        "shipping_priority": q_shipping_priority,
-        "local_supplier_volume": q_local_supplier_volume,
-        "outer_join_agg": q_outer_join_agg,
-        "semi_anti_join": q_semi_anti_join,
-        "set_ops": q_set_ops,
-        "rollup": q_rollup,
-        "window_analytics": q_window_analytics,
-        "pivot": q_pivot,
-        "unpivot": q_unpivot,
-        "distinct": q_distinct,
-        "topk_per_group": q_topk_per_group,
-        "argmin_agg": q_argmin_agg,
-        "composite_key_join": q_composite_key_join,
-        "closest_stations": q_closest_stations,
-        "closest_stations_grid": q_closest_stations_grid,
-        "cleaning_scalars": q_cleaning_scalars,
-        "json_flatten": q_json_flatten,
-        "asof_join": q_asof_join,
-        "range_join": q_range_join,
-        "sliding_window": q_sliding_window,
-        "exact_dup_groups": q_exact_dup_groups,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "simhash": q_simhash,
-        "simhash_pairs": q_simhash_pairs,
-        "near_dup_components": q_near_dup_components,
-        "near_dup_dedup": q_near_dup_dedup,
-        "text_quality": q_text_quality,
-        "token_counts": q_token_counts,
-        "language_id": q_language_id,
-        "fingerprints": q_fingerprints,
-        "normalize_text": q_normalize_text,
-        "scrub_pii": q_scrub_pii,
-        "chunk_documents": q_chunk_documents,
-        "top_ngrams": q_top_ngrams,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "tfidf_doc_similarity": q_tfidf_doc_similarity,
-        "hash_sample": q_hash_sample,
-        "hash_split": q_hash_split,
-        "quota_cap": q_quota_cap,
-        "quality_filter": q_quality_filter,
-        # -- round-12 additions (tail of this round's queue; DECLARED
-        # to lead the round-13 window in COVERAGE.md — the two-round
-        # signing invariant; each bare-verified green at add time) ----
-        "hits_scores": q_hits_scores,
-        "graph_assortativity": q_graph_assortativity,
-        "herfindahl_index": q_herfindahl_index,
-        "ewma_smooth": q_ewma_smooth,
-        "clustering_coeff": q_clustering_coeff,
-        "adamic_adar": q_adamic_adar,
-        "prop_ztest": q_prop_ztest,
-        "streaming_ewma": q_streaming_ewma,
-        "oov_rate": q_oov_rate,
-        "anova_f": q_anova_f,
-        "cross_correlation": q_cross_correlation,
-        "sax_symbols": q_sax_symbols,
-    }
+    """Every ``q_<name>`` builder in this module, keyed by ``<name>``:
+    the driver window first, then definition order."""
+    builders = {n[2:]: f for n, f in globals().items() if n.startswith("q_")}
+    return {**{n: builders[n] for n in _DRIVER_WINDOW}, **builders}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "order_totals": _SQL_PO_TOTALS,
-        # -- round-9 additions --------------------------------------------
-        "ngram_novelty": _SQL_NGRAM_NOVELTY,
-        "dsir_importance": _sql_dsir_importance(),
-        "t_closeness": _SQL_T_CLOSENESS,
-        "audio_frames_real": _SQL_AUDIO_FRAMES_REAL,
-        "image_histogram_real": _SQL_IMAGE_HISTOGRAM_REAL,
-        "zip_roundtrip": _SQL_ZIP_ROUNDTRIP,
-        "mase_eval": _SQL_MASE_EVAL,
-        "bloom_semi_join": _sql_bloom_semi_join(),
-        "group_kfold": _sql_group_kfold(),
-        "lateness_profile": _SQL_LATENESS_PROFILE,
-        "cross_source_dups": _SQL_CROSS_SOURCE_DUPS,
-        "kmv_overlap": _sql_kmv_overlap(),
-        "ngram_search": _SQL_NGRAM_SEARCH,
-        "latex_strip": _SQL_LATEX_STRIP,
-        "bitext_mine": _sql_bitext_mine(),
-        "stl_decompose": _SQL_STL_DECOMPOSE,
-        "kcenter_coreset": _sql_kcenter_coreset(),
-        "bpe_fertility": _sql_bpe_fertility(),
-        "blocking_eval": _SQL_BLOCKING_EVAL,
-        "streaming_enrich": _SQL_STREAMING_ENRICH,
-        "streaming_upsert": _SQL_STREAMING_UPSERT,
-        "image_patches_real": _SQL_IMAGE_PATCHES_REAL,
-        "audio_resample_real": _SQL_AUDIO_RESAMPLE_REAL,
-        "rfm_segments": _SQL_RFM_SEGMENTS,
-        # round-10 session additions
-        "global_rank": _SQL_GLOBAL_RANK,
-        "fim_transform": _sql_fim_transform(),
-        "streaming_outer_join": _SQL_STREAMING_OUTER_JOIN,
-        "winnow_fingerprints": _sql_winnow_fingerprints(),
-        "isotonic_calibration": _SQL_ISOTONIC_CALIBRATION,
-        "rendezvous_shards": _sql_rendezvous_shards(),
-        "aiff_meta_real": _SQL_AIFF_META_REAL,
-        "pcap_extract": _SQL_PCAP_EXTRACT,
-        "tfrecord_roundtrip": _SQL_TFRECORD_ROUNDTRIP,
-        "ulid_generate": _sql_ulid_generate(),
-        "shuffle_quality": _sql_shuffle_quality(),
-        "randomized_response": _sql_randomized_response(),
-        "cdc_chunks": _sql_cdc_chunks(),
-        "facility_location": _sql_facility_location(),
-        "quantile_normalize": _SQL_QUANTILE_NORMALIZE,
-        "skyline": _SQL_SKYLINE,
-        "label_propagation": _sql_label_propagation(),
-        "bfs_hops": _sql_bfs_hops(),
-        "gaps_islands": _SQL_GAPS_ISLANDS,
-        "woe_encoding": _SQL_WOE_ENCODING,
-        "lof_outliers": _SQL_LOF_OUTLIERS,
-        "mutual_info": _SQL_MUTUAL_INFO,
-        "weighted_topk_sample": _SQL_WEIGHTED_TOPK_SAMPLE,
-        "fs_weights": _SQL_FS_WEIGHTS,
-        "pca_project": _SQL_PCA_PROJECT,
-        "grouped_mode": _SQL_GROUPED_MODE,
-        "rake_keywords": _sql_rake_keywords(),
-        "sequence_gaps": _SQL_SEQUENCE_GAPS,
-        "allen_relations": _SQL_ALLEN_RELATIONS,
-        "skipgram_pairs": _sql_skipgram_pairs(),
-        "fd_check": _SQL_FD_CHECK,
-        "streaming_topk": _SQL_STREAMING_TOPK,
-        "good_turing": _sql_good_turing(),
-        "ips_eval": _SQL_IPS_EVAL,
-        "zipf_fit": _sql_zipf_fit(),
-        "nelson_aalen": _SQL_NELSON_AALEN,
-        "term_burstiness": _sql_term_burstiness(),
-        "transition_entropy": _SQL_TRANSITION_ENTROPY,
-        "centroid_novelty": _SQL_CENTROID_NOVELTY,
-        "cuped_eval": _SQL_CUPED_EVAL,
-        # -- round-12 additions -------------------------------------------
-        "hits_scores": _sql_hits_scores(),
-        "graph_assortativity": _SQL_GRAPH_ASSORTATIVITY,
-        "herfindahl_index": _SQL_HERFINDAHL_INDEX,
-        "ewma_smooth": _SQL_EWMA_SMOOTH,
-        "clustering_coeff": _SQL_CLUSTERING_COEFF,
-        "adamic_adar": _SQL_ADAMIC_ADAR,
-        "prop_ztest": _SQL_PROP_ZTEST,
-        # shared with the batch twin: a hash match proves the streaming
-        # state fold equals the batch recurrence exactly
-        "streaming_ewma": _SQL_EWMA_SMOOTH,
-        "oov_rate": _SQL_OOV_RATE,
-        "anova_f": _SQL_ANOVA_F,
-        "cross_correlation": _SQL_CROSS_CORRELATION,
-        "sax_symbols": _SQL_SAX_SYMBOLS,
-        "sorted_neighborhood": _SQL_SORTED_NEIGHBORHOOD,
-        "maxsim_retrieval": _sql_maxsim_retrieval(),
-        "resample_interp": _SQL_RESAMPLE_INTERP,
-        "fair_interleave": _SQL_FAIR_INTERLEAVE,
-        # -- round-6 additions --------------------------------------------
-        "observed_write": _SQL_OBSERVED_WRITE,
-        "schema_drift": _SQL_SCHEMA_DRIFT,
-        "clustered_write": _SQL_CLUSTERED_WRITE,
-        "triangle_count": _SQL_TRIANGLE_COUNT,
-        "l_diversity": _SQL_L_DIVERSITY,
-        "corr_matrix": _sql_corr_matrix(),
-        "cusum_shift": _SQL_CUSUM_SHIFT,
-        "hll_distinct": _SQL_HLL_DISTINCT,
-        "url_extract": _SQL_URL_EXTRACT,
-        "jpeg_progressive_real": _sql_jpeg_progressive_real(),
-        "gif_frames_real": _sql_gif_frames_real(),
-        "flac_decode_real": _sql_flac_decode_real(),
-        "ab_test": _SQL_AB_TEST,
-        "split_leakage": _sql_split_leakage(),
-        "video_frames_real": _sql_video_frames_real(),
-        "mp4_frames_real": _sql_mp4_frames_real(),
-        "url_dedup": _SQL_URL_DEDUP,
-        "m4a_meta_real": _sql_m4a_meta_real(),
-        "vtt_parse_real": _sql_vtt_parse_real(),
-        "mkv_frames_real": _sql_mkv_frames_real(),
-        "ogg_meta_real": _sql_ogg_meta_real(),
-        "robots_audit": _SQL_ROBOTS_AUDIT,
-        "webdataset_roundtrip": _SQL_WEBDATASET_ROUNDTRIP,
-        "id3_tags_real": _SQL_ID3_TAGS_REAL,
-        "charset_sniff": _SQL_CHARSET_SNIFF,
-        "docx_extract": _SQL_DOCX_EXTRACT,
-        "warc_gz_roundtrip": _SQL_WARC_GZ_ROUNDTRIP,
-        "embargo_split": _SQL_EMBARGO_SPLIT,
-        "ip_anonymize": _SQL_IP_ANONYMIZE,
-        "join_skew": _SQL_JOIN_SKEW,
-        "matryoshka_eval": _sql_matryoshka_eval(),
-        "lag_features": _SQL_LAG_FEATURES,
-        "warc_http_roundtrip": _SQL_WARC_HTTP_ROUNDTRIP,
-        "sqlite_roundtrip": _SQL_SQLITE_ROUNDTRIP,
-        "pdf_extract": _SQL_PDF_EXTRACT,
-        "arrow_ipc_roundtrip": _SQL_ARROW_IPC_ROUNDTRIP,
-        "mbox_extract": _SQL_MBOX_EXTRACT,
-        "kaplan_meier": _SQL_KAPLAN_MEIER,
-        "webp_meta_real": _sql_webp_meta_real(),
-        "heaps_law": _SQL_HEAPS_LAW,
-        "xz_jsonl_roundtrip": _SQL_XZ_JSONL_ROUNDTRIP,
-        "media_pipeline": _sql_media_pipeline(),
-        "wap_publish": _SQL_WAP_PUBLISH,
-        "jpeg_color_real": _sql_jpeg_color_real(),
-        "png_color_real": _sql_png_color_real(),
-        "cluster_eval": _SQL_CLUSTER_EVAL,
-        "zstd_roundtrip": _SQL_ZSTD_ROUNDTRIP,
-        "g711_decode_real": _sql_g711_decode_real(),
-        "raster_decode_real": _sql_raster_decode_real(),
-        "tiff_decode_real": _sql_tiff_decode_real(),
-        "adpcm_decode_real": _sql_adpcm_decode_real(),
-        "cms_frequency": _SQL_CMS_FREQUENCY,
-        "kmv_distinct": _SQL_KMV_DISTINCT,
-        "geohash_tiles": _sql_geohash_tiles(),
-        "acf_daily": _SQL_ACF_DAILY,
-        "midi_decode_real": _sql_midi_decode_real(),
-        "theil_sen": _SQL_THEIL_SEN,
-        "webdataset_export": _SQL_WEBDATASET_EXPORT,
-        "unicode_normalize": _SQL_UNICODE_NORMALIZE,
-        "jackknife_se": _SQL_JACKKNIFE_SE,
-        "cohens_kappa": _SQL_COHENS_KAPPA,
-        "hashed_features": _SQL_HASHED_FEATURES,
-        "permutation_test": _SQL_PERMUTATION_TEST,
-        "markdown_strip": _SQL_MARKDOWN_STRIP,
-        "approx_quantile_contract": _SQL_APPROX_QUANTILE_CONTRACT,
-        "k_core": _sql_k_core(),
-        "chi2_independence": _SQL_CHI2_INDEPENDENCE,
-        "luhn_mask": _sql_luhn_mask(),
-        "k_anonymize": _SQL_K_ANONYMIZE,
-        "spearman": _SQL_SPEARMAN,
-        "mann_whitney": _SQL_MANN_WHITNEY,
-        "ks_test": _SQL_KS_TEST,
-        "target_encode": _SQL_TARGET_ENCODE,
-        "hilbert_key": _sql_hilbert_key(),
-        "mp3_meta_real": _sql_mp3_meta_real(),
-        "bmp_decode_real": _sql_bmp_decode_real(),
-        "exif_extract_real": _sql_exif_extract_real(),
-        "warc_roundtrip": _SQL_WARC_ROUNDTRIP,
-        "ols_regression": _SQL_OLS_REGRESSION,
-        "link_prediction": _SQL_LINK_PREDICTION,
-        "kendall_tau": _SQL_KENDALL_TAU,
-        "gini_gain": _SQL_GINI_GAIN,
-        "calibration": _SQL_CALIBRATION,
-        "bootstrap_ci": _sql_bootstrap_ci(),
-        "readability": _SQL_READABILITY,
-        "srt_parse_real": _sql_srt_parse_real(),
-        "image_phash": _sql_image_phash(),
-        "naive_bayes": _SQL_NAIVE_BAYES,
-        "density_clusters": _SQL_DENSITY_CLUSTERS,
-        "holt_forecast": _SQL_HOLT_FORECAST,
-        "xlsx_roundtrip": _SQL_XLSX_ROUNDTRIP,
-        "domain_rollup": _SQL_DOMAIN_ROLLUP,
-        "avro_roundtrip": _SQL_AVRO_ROUNDTRIP,
-        "fixed_width_roundtrip": _SQL_FIXED_WIDTH_ROUNDTRIP,
-        "parquet_stats": _SQL_PARQUET_STATS,
-        "point_in_polygon": _sql_point_in_polygon(),
-        "merge_intervals": _SQL_MERGE_INTERVALS,
-        "schema_evolution": _SQL_SCHEMA_EVOLUTION,
-        "mahalanobis": _SQL_MAHALANOBIS,
-        "golden_record": _SQL_GOLDEN_RECORD,
-        "media_sniff": _SQL_MEDIA_SNIFF,
-        "reconciliation": _SQL_RECONCILIATION,
-        "pricing_summary": _SQL_PRICING_SUMMARY,
-        "shipping_priority": _SQL_SHIPPING_PRIORITY,
-        "local_supplier_volume": _SQL_LOCAL_SUPPLIER_VOLUME,
-        "outer_join_agg": _SQL_OUTER_JOIN,
-        "semi_anti_join": _SQL_SEMI_ANTI,
-        "set_ops": _SQL_SET_OPS,
-        "rollup": _SQL_ROLLUP,
-        "window_analytics": _SQL_WINDOW_ANALYTICS,
-        "pivot": _SQL_PIVOT,
-        "unpivot": _SQL_UNPIVOT,
-        "distinct": _SQL_DISTINCT,
-        "top1_per_group": _SQL_TOP1,
-        "topk_per_group": _SQL_TOPK,
-        "argmin_agg": _SQL_ARGMIN,
-        "composite_key_join": _SQL_COMPOSITE_JOIN,
-        "closest_stations": _SQL_CLOSEST,
-        "closest_stations_grid": _SQL_CLOSEST,
-        "cleaning_scalars": _SQL_CLEANING,
-        "xml_shred": _SQL_XML_SHRED,
-        "json_flatten": _SQL_JSON,
-        "asof_join": _SQL_ASOF,
-        "range_join": _SQL_RANGE_JOIN,
-        "tumbling_window": _SQL_TUMBLING,
-        "sliding_window": _SQL_SLIDING,
-        "session_window": _SQL_SESSION,
-        # streaming twins share the batch oracles — identical result sets
-        "streaming_tumbling": _SQL_TUMBLING,
-        "streaming_session": _SQL_SESSION,
-        "streaming_user_stats": _SQL_STREAM_USER_STATS,
-        "exact_dup_groups": _SQL_EXACT_DUP,
-        "minhash_signatures": _sql_minhash_sigs_exploded(),
-        "minhash_lsh_pairs": _sql_lsh_pairs(),
-        "minhash_lsh_pairs_expr": _sql_lsh_pairs(),
-        "lsh_dedup_incremental": _sql_lsh_incremental(),
-        "ngram_jaccard_pairs": _SQL_JACCARD,
-        "simhash": _sql_simhash(),
-        "simhash_expr": _sql_simhash(),
-        "simhash_pairs": _sql_simhash_pairs(),
-        "near_dup_components": _sql_near_dup_components(),
-        "near_dup_dedup": _sql_near_dup_dedup(),
-        "text_quality": _SQL_TEXT_QUALITY,
-        "token_counts": _SQL_TOKEN_COUNTS,
-        "language_id": _sql_language_id(),
-        "fingerprints": _SQL_FINGERPRINTS,
-        "normalize_text": _SQL_NORMALIZE,
-        "scrub_pii": _sql_scrub_pii(),
-        "chunk_documents": _sql_chunk_documents(),
-        "top_ngrams": _sql_top_ngrams(),
-        "tfidf_top_terms": _sql_tfidf(),
-        "tfidf_doc_similarity": _sql_tfidf_doc_similarity(),
-        "hash_sample": _sql_hash_sample(),
-        "hash_split": _sql_hash_split(),
-        "weighted_sample": _sql_weighted_sample(),
-        "quota_cap": _sql_quota_cap(),
-        "quality_filter": _SQL_QUALITY_FILTER,
-        "assign_packs": _SQL_ASSIGN_PACKS,
-        # scalable two-phase packing must equal the single-window packing
-        "assign_packs_scalable": _SQL_ASSIGN_PACKS,
-        "ann_brute_force": _SQL_ANN_BRUTE,
-        "ann_lsh": _sql_ann_lsh(),
-        "ann_ivf": _sql_ann_ivf(),
-        # persisted index must reproduce the in-memory IVF bit-for-bit
-        "ann_ivf_indexed": _sql_ann_ivf(),
-        "ann_recall": _sql_ann_recall(),
-        "ann_rrf": _sql_ann_rrf(),
-        "embedding_near_dup": _sql_embedding_near_dup(),
-        "multimodal_features": _SQL_MULTIMODAL,
-        "frame_sample": _SQL_FRAME_SAMPLE,
-        "csv_roundtrip": _SQL_CSV_ROUNDTRIP,
-        "filename_partition": _SQL_FNAME_PARTITION,
-        "ctas_roundtrip": _SQL_CTAS,
-        "jdbc_roundtrip": _SQL_JDBC_ROUNDTRIP,
-        "jsonl_roundtrip": _SQL_JSONL_ROUNDTRIP,
-        "order_by_limit": _SQL_ORDER_BY_LIMIT,
-        "word_stats": _SQL_WORD_STATS,
-        "cube_agg": _SQL_CUBE,
-        "grouped_median": _SQL_GROUPED_MEDIAN,
-        "histogram": _SQL_HISTOGRAM,
-        "profile_table": _SQL_PROFILE,
-        # the sketch-contract harness: oracle pins exact stats + TRUE
-        # for every in-engine-verified error bound
-        "approx_profile": _SQL_APPROX_PROFILE,
-        "contamination_hits": _SQL_CONTAMINATION_HITS,
-        "decontaminate": _SQL_DECONTAMINATE,
-        "grouped_quantiles": _SQL_GROUPED_QUANTILES,
-        "iqr_outliers": _SQL_IQR_OUTLIERS,
-        "merge_upsert": _SQL_MERGE_UPSERT,
-        "stratified_sample": _SQL_STRATIFIED_SAMPLE,
-        "constraint_violations": _SQL_CONSTRAINTS,
-        "having_filter": _SQL_HAVING,
-        "count_distinct_agg": _SQL_COUNT_DISTINCT,
-        "null_safe_join": _SQL_NULL_SAFE_JOIN,
-        "below_avg_filter": _SQL_BELOW_AVG,
-        "resample_ffill": _SQL_RESAMPLE_FFILL,
-        "scd2_history": _SQL_SCD2,
-        "grouping_sets": _SQL_GROUPING_SETS,
-        "collect_sorted": _SQL_COLLECT_SORTED,
-        "range_frame_window": _SQL_RANGE_FRAME,
-        "pagerank": _SQL_PAGERANK,
-        "exists_subquery": _SQL_EXISTS,
-        "scalar_subquery": _SQL_SCALAR_SUBQ,
-        "line_dedup": _SQL_LINE_DEDUP,
-        "ntile_windows": _SQL_NTILE,
-        "kmeans_assign": _SQL_KMEANS,
-        "fuzzy_join": _SQL_FUZZY,
-        "quantize_embeddings": _SQL_QUANTIZE,
-        "salted_join": _SQL_SALTED_JOIN,
-        "repetition_signals": _SQL_REPETITION,
-        "orc_roundtrip": _SQL_ORC_ROUNDTRIP,
-        "sessionize": _SQL_SESSIONIZE,
-        "funnel": _SQL_FUNNEL,
-        "cohort_retention": _SQL_COHORT,
-        "kmeans_train": _SQL_KMEANS_TRAIN,
-        "build_vocab": _SQL_VOCAB,
-        "zscore": _SQL_ZSCORE,
-        "html_extract": _SQL_HTML_EXTRACT,
-        "rare_tokens": _SQL_RARE_TOKENS,
-        "bm25_search": _SQL_BM25,
-        "jaccard_prefix_join": _SQL_JACCARD_PREFIX,
-        "duplicate_spans": _sql_duplicate_spans(),
-        "span_dup_stats": _sql_span_dup_stats(),
-        "mix_sources": _sql_mix_sources(),
-        "select_until_budget": _sql_select_until_budget(),
-        "embedding_dim_profile": _SQL_EMBEDDING_DIM_PROFILE,
-        "distribution_drift": _SQL_DRIFT,
-        "snapshot_diff": _sql_snapshot_diff(),
-        "multimodal_decode_real": _sql_multimodal_decode_real(),
-        "jpeg_decode_real": _sql_jpeg_decode_real(),
-        "bpe_train": _sql_bpe_train(),
-        "bpe_segment": _sql_bpe_segment(),
-        "winsorize": _SQL_WINSORIZE,
-        "streaming_join": _SQL_STREAMING_JOIN,
-        "action_sequences": _SQL_ACTION_SEQUENCES,
-        "negative_samples": _sql_negative_samples(),
-        "corpus_report": _SQL_CORPUS_REPORT,
-        "ngram_model_score": _sql_ngram_model_score(),
-        "streaming_dedup": _SQL_STREAMING_DEDUP,
-        "training_pipeline": _sql_training_pipeline(),
-        "zorder_key": _SQL_ZORDER,
-        "gdpr_delete": _SQL_GDPR_DELETE,
-        "compact_roundtrip": _SQL_COMPACT,
-        "variant_extract": _SQL_VARIANT,
-        "volume_shipping": _SQL_VOLUME_SHIPPING,
-        "market_share": _SQL_MARKET_SHARE,
-        "product_profit": _SQL_PRODUCT_PROFIT,
-        "returned_items": _SQL_RETURNED_ITEMS,
-        "priority_shipmode": _SQL_PRIORITY_SHIPMODE,
-        "customer_distribution": _SQL_CUSTOMER_DISTRIBUTION,
-        "promo_revenue": _SQL_PROMO_REVENUE,
-        "top_supplier": _SQL_TOP_SUPPLIER,
-        "min_cost_supplier": _SQL_MIN_COST_SUPPLIER,
-        "disjunctive_pred": _SQL_DISJUNCTIVE_PRED,
-        "forecast_revenue": _SQL_FORECAST_REVENUE,
-        "important_parts": _SQL_IMPORTANT_PARTS,
-        "promo_suppliers": _SQL_PROMO_SUPPLIERS,
-        "waiting_suppliers": _SQL_WAITING_SUPPLIERS,
-        "semantic_dedup": _sql_semantic_dedup(),
-        "remove_duplicate_spans": _sql_remove_duplicate_spans(),
-        "temperature_mix": _sql_temperature_mix(),
-        "skew_report": _SQL_SKEW_REPORT,
-        "token_entropy": _sql_token_entropy(),
-        "tokenize_pack": _sql_tokenize_pack(),
-        "interval_concurrency": _SQL_INTERVAL_CONCURRENCY,
-        "incremental_recompute": _SQL_INCREMENTAL_RECOMPUTE,
-        "audio_decode_real": _SQL_AUDIO_DECODE_REAL,
-        "mad_outliers": _SQL_MAD_OUTLIERS,
-        "ann_lsh_multi": _sql_ann_lsh_multi(),
-        "action_transitions": _SQL_ACTION_TRANSITIONS,
-        "contamination_report": _SQL_CONTAMINATION_REPORT,
-        "attribution": _SQL_ATTRIBUTION,
-        "heavy_hitters": _sql_heavy_hitters(),
-        "fk_containment": _SQL_FK_CONTAINMENT,
-        "flatten_hierarchy": _SQL_FLATTEN_HIERARCHY,
-        "language_confusion": _sql_language_confusion(),
-        "dedup_report": _sql_dedup_report(),
-        "hybrid_search": _sql_hybrid_search(),
-        # streaming ingest shares the batch quality-filter oracle —
-        # identical result set proves gate+dedup stream == batch
-        "streaming_ingest": _SQL_QUALITY_FILTER,
-        "table_digest": _sql_table_digest(),
-        "lsh_recall": _sql_lsh_recall(),
-        "power_iteration": _sql_power_iteration(),
-        "group_split": _sql_group_split(),
-        "merge_aggregate": _SQL_MERGE_AGGREGATE,
-        "bucketed_packs": _sql_bucketed_packs(),
-        "streaming_sliding": _SQL_SLIDING,
-        "contrastive_pairs": _sql_contrastive_pairs(),
-        # ONE string, two engines: the oracle IS the Spark query text
-        "sql_interface": _SQL_INTERFACE_TEXT,
-        "image_augment_real": _sql_image_augment_real(),
-        "dup_weights": _SQL_DUP_WEIGHTS,
-        "collocations": _sql_collocations(),
-        "seasonality": _SQL_SEASONALITY,
-        "ann_mrr": _sql_ann_mrr(),
-        "ann_ndcg": _sql_ann_ndcg(),
-        "quality_roc": _sql_quality_roc(),
-        "shuffle_shards": _SQL_SHUFFLE_SHARDS,
-        "pq_encode": _SQL_PQ_ENCODE,
-        "pq_search": _SQL_PQ_SEARCH,
-        "record_linkage": _SQL_RECORD_LINKAGE,
-        "materialize_epoch": _sql_materialize_epoch(),
-        "image_dhash_pairs": _SQL_IMAGE_DHASH_PAIRS,
-        "epoch_pipeline": _sql_epoch_pipeline(),
-        "row_diff": _sql_row_diff(),
-        "pareto_front": _SQL_PARETO_FRONT,
-        "frequent_pairs": _SQL_FREQUENT_PAIRS,
-        "ivf_pq_search": _SQL_IVF_PQ_SEARCH,
-        "image_dedup": _SQL_IMAGE_DEDUP,
-        "versioned_roundtrip": _sql_row_diff(),
-        "cdc_rollup": _SQL_CDC_ROLLUP,
-        "augment_dropout": _sql_augment_dropout(),
-        "k_anonymity": _SQL_K_ANONYMITY,
-        "twap": _SQL_TWAP,
-        "ohlc": _SQL_OHLC,
-        "gini": _SQL_GINI,
-        "benford": _SQL_BENFORD,
-        "containment_pairs": _sql_containment_pairs(),
-        "source_keywords": _SQL_SOURCE_KEYWORDS,
-        "doc_features": _sql_doc_features(),
-        "sequence_match": _SQL_SEQUENCE_MATCH,
-        "decayed_sum": _SQL_DECAYED_SUM,
-        "daily_anomalies": _SQL_DAILY_ANOMALIES,
-        "normalized_dup_gain": _SQL_NORMALIZED_DUP_GAIN,
-        "quantile_bins": _sql_quantile_bins(),
-        "dedup_keep_best": _sql_dedup_keep_best(),
-        "contingency": _SQL_CONTINGENCY,
-        "running_distinct": _SQL_RUNNING_DISTINCT,
-        # approx_profile: sketch outputs are engine-specific by design —
-        # rows-only check; error bound asserted in tests/test_profile.py
-    }
+    """The DuckDB twin of each query: ``_SQL_<NAME>`` if defined, else
+    ``_sql_<name>()``."""
+    g = globals()
+    out = {}
+    for name in queries():
+        const = f"_SQL_{name.upper()}"
+        out[name] = g[const] if const in g else g[f"_sql_{name}"]()
+    return out

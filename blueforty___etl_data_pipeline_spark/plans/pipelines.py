@@ -81,11 +81,17 @@ def load_purchases_csv(
     # header=true: OSS Spark has no skipRows option, so the header line must
     # be consumed by the reader itself (SKIP_HEADER=1, BlueForty.py:26).
     # The declared all-string layout binds fields by position, whatever
-    # the header says, and needs no header-discovery job.
+    # the header says, and needs no header-discovery job.  No string field
+    # can fail to parse, so only a wrong-width line is malformed:
+    # PERMISSIVE keeps it NULL-padded or truncated, as the positional COPY
+    # does, whether or not CSV column pruning is on (DROPMALFORMED keeps
+    # it only while pruning is on).
     raw = read_csv(
         spark,
         path,
-        options={**PURCHASES_CSV_OPTIONS, "header": "true"},
+        options={
+            **PURCHASES_CSV_OPTIONS, "header": "true", "mode": "PERMISSIVE"
+        },
         path_glob=path_glob,
         columns=PURCHASES_FIELDS,
     )

@@ -99,3 +99,24 @@ def test_entry_runs_reconciliation_at_golden_row_count(spark):
         entrymod.oracle_sql()["reconciliation"]
     ).df().shape[0]
     assert len(rows) == want and want > 0
+
+
+def test_driver_window_leads_queries():
+    """The driver checks the first 50 queries(); that window is the
+    frozen ``_DRIVER_WINDOW`` of 50 distinct declared names."""
+    import __spark_entry__ as entrymod
+
+    window = entrymod._DRIVER_WINDOW
+    assert len(window) == len(set(window)) == 50
+    assert list(entrymod.queries())[:50] == list(window)
+
+
+def test_each_query_has_one_oracle_declaration():
+    """oracle_sql() prefers ``_SQL_<NAME>`` over ``_sql_<name>()``, so a
+    query declaring both would silently ignore one of them."""
+    import __spark_entry__ as entrymod
+
+    g = vars(entrymod)
+    both = [n for n in entrymod.queries()
+            if f"_SQL_{n.upper()}" in g and f"_sql_{n}" in g]
+    assert not both, both

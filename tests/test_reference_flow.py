@@ -7,6 +7,8 @@ from __future__ import annotations
 import datetime
 import os
 
+import pytest
+
 from blueforty___etl_data_pipeline_spark.plans import reference_flow
 from blueforty___etl_data_pipeline_spark.plans.pipelines import (
     load_purchases_csv,
@@ -139,11 +141,14 @@ def test_lazy_flow_starts_no_jobs_but_the_inferred_header_read(
     assert len(jobs) <= 1, jobs
 
 
-def test_purchases_wrong_width_lines_load_positionally(spark, tmp_path):
+@pytest.mark.parametrize("column_pruning", ["true", "false"])
+def test_purchases_wrong_width_lines_load_positionally(
+    spark, tmp_path, column_pruning
+):
     # The reference's positional COPY (SELECT $1..$21, BlueForty.py:88-111)
     # loads a wrong-width line: a short line's missing fields are NULL
     # and a long line keeps $1..$21.  The declared 21-field layout must
-    # keep that under DROPMALFORMED.
+    # keep that whether or not the CSV parser prunes columns.
     d = tmp_path / "purchases"
     d.mkdir()
     header = ",".join(f"c{i}" for i in range(1, 22))
@@ -153,10 +158,16 @@ def test_purchases_wrong_width_lines_load_positionally(spark, tmp_path):
     (d / "purchases_2013-01.csv").write_text(
         "\n".join([header, good, short, long]) + "\n"
     )
-    rows = {
-        r["PurchaseOrderID"]: r
-        for r in load_purchases_csv(spark, str(d)).collect()
-    }
+    conf = "spark.sql.csv.parser.columnPruning.enabled"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, column_pruning)
+    try:
+        rows = {
+            r["PurchaseOrderID"]: r
+            for r in load_purchases_csv(spark, str(d)).collect()
+        }
+    finally:
+        spark.conf.set(conf, prior)
     assert sorted(rows) == [1, 2, 3]
     s = rows[2]
     assert s["SupplierID"] == 11 and s["SupplierReference"] == "REF-B"

@@ -524,27 +524,13 @@ def test_streaming_ewma_negative_values_trunc_parity(spark, tmp_path):
     assert got[2] == -5  # trunc(-22/4); a floor fold would emit -6
 
 
-@pytest.mark.parametrize("raw", ["8g", " "])
-def test_stream_partitions_malformed_env_falls_back(tmp_path, monkeypatch, raw):
-    # A malformed SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS must not raise
-    # inside every drain: it is ignored and the derived count is used.
-    from __spark_entry__ import _stream_partitions_for
-
-    src = tmp_path / "staged"
-    src.mkdir()
-    with open(src / "part-0", "wb") as f:
-        f.truncate(400 << 20)  # sparse 400 MB -> 13 partitions
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raw)
-    assert _stream_partitions_for(str(src), 32) == 13
-
-
 def test_stream_partition_scope_is_adaptive_and_restores(spark, tmp_path):
     # Round-15 (guide §2.1/§2.2, VERDICT r14 #2): streaming drains pin
     # their state-store partition count to spark.sql.shuffle.partitions
     # at start, so the entry scopes a scale-adaptive value around each
     # drain.  Pin the derivation (floor 8, ~32 MB/partition, capped at
-    # the session conf, env override wins) and that the scope restores
-    # the session value even on error.
+    # the session conf) and that the scope restores the session value
+    # even on error.
     import os as _os
 
     from __spark_entry__ import (
@@ -566,12 +552,6 @@ def test_stream_partition_scope_is_adaptive_and_restores(spark, tmp_path):
         f.truncate(400 << 20)  # sparse 400 MB
     assert _stream_partitions_for(big, 32) == 13
     assert _stream_partitions_for(big, 4) == 4
-    # env override wins
-    _os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"] = "9"
-    try:
-        assert _stream_partitions_for(src, 32) == 9
-    finally:
-        del _os.environ["SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS"]
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     expected = str(_stream_partitions_for(src, int(before)))
